@@ -2,35 +2,24 @@
 canonicalization kernel (north_rule: "canonicalization via iterative
 connected-components over a salted, hash-partitioned edge DataFrame").
 
-Two loop structures, selected by ``algorithm``:
-
-  * ``hashmin`` (default) — hash-to-min label propagation with pointer
-    jumping (Rastogi et al., "Finding Connected Components in
-    Map-Reduce in Logarithmic Rounds", ICDE'13 family): a static
-    symmetric edge table plus a (node, comp) label table; each round
-    propagates the neighborhood min into the labels (one join + one
-    groupBy) then pointer-jumps comp := comp(comp) (one self-join).
-    Converges in O(log d) rounds via doubling. Measured 1.6-2.1x
-    faster than the star loop on both the gated sf0.1 graph and the
-    4.1M-edge chain+hub stress (tools/cc_experiment.py, r9) — fewer
-    per-round jobs (1 materialization vs 2, no per-round distincts).
-  * ``star`` — alternating large-star / small-star (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14). The edge
-    set SHRINKS every round, which wins on dense graphs whose
-    contracted remnant collapses quickly; kept selectable for that
-    regime and as the independent oracle for the hashmin loop.
+Hash-to-min label propagation with pointer jumping (Rastogi et al.,
+"Finding Connected Components in Map-Reduce in Logarithmic Rounds",
+ICDE'13 family): a static symmetric edge table plus a (node, comp)
+label table; each round propagates the neighborhood min into the labels
+(one join + one groupBy), then pointer-jumps comp := comp(comp) (one
+self-join). Converges in O(log d) rounds via doubling.
 
 Scale notes:
-  * hashmin rounds are two hash-shuffles (edge join on node id, label
-    groupBy) plus one self-join keyed by component id. A giant
-    component makes that jump join skewed on its comp key — AQE
-    skew-join splitting handles it (the 100k-spoke hub stress
-    exercises exactly this shape). For pre-join hot-key splitting see
-    operators/skew.py.
-  * The edge table is materialized ONCE (hashmin) — per-round shuffle
-    volume is |E| + |V|, vs the star loop's shrinking-but-rewritten
-    edge set. Labels are (node, comp) pairs: |V| rows regardless of
+  * Rounds are two hash-shuffles (edge join on node id, label groupBy)
+    plus one self-join keyed by component id. A giant component makes
+    that jump join skewed on its comp key — AQE skew-join splitting
+    handles it (the 100k-spoke hub stress exercises exactly this
+    shape). For pre-join hot-key splitting see operators/skew.py.
+  * The edge table is materialized ONCE — per-round shuffle volume is
+    |E| + |V|. Labels are (node, comp) pairs: |V| rows regardless of
     round.
+  * Under the ``hint_broadcast`` cap the label table is broadcast in
+    the pointer jump and the convergence probe, which stop shuffling.
   * `localCheckpoint` between rounds truncates the lineage so the plan
     doesn't grow exponentially across iterations (a known failure mode
     of iterative DataFrame jobs).
@@ -40,12 +29,16 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
+import logging
 import os
 import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 # spark.sql.constraintPropagation is SESSION-global: two threads
 # toggling it independently can re-enable it mid-localCheckpoint in the
@@ -67,23 +60,6 @@ def constraint_propagation_disabled(spark):
             spark.conf.set(_CP_KEY, before)
 
 
-def _canonical_edges(edges: DataFrame) -> DataFrame:
-    """Undirected edge set kept in the single (u < v) orientation,
-    self-loops removed. Only one direction survives: the loop's ``sym``
-    rebuilds both directions every round anyway, so emitting a
-    symmetric set here made round 1 carry every edge twice (ADVICE r3 —
-    correctness was absorbed by the min-agg/distinct, but round-1
-    large-star processed double volume)."""
-    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    lo = F.least(F.col("u"), F.col("v"))
-    hi = F.greatest(F.col("u"), F.col("v"))
-    return (
-        e.filter(F.col("u") != F.col("v"))
-        .select(lo.alias("u"), hi.alias("v"))
-        .distinct()
-    )
-
-
 def _materialize(df: DataFrame) -> DataFrame:
     """Truncate lineage between CC rounds (iterative DataFrame jobs grow
     exponential plans otherwise). Fast path: localCheckpoint. Spark
@@ -94,43 +70,51 @@ def _materialize(df: DataFrame) -> DataFrame:
     ``checkpoint()`` against the HDFS checkpoint dir."""
     try:
         return df.localCheckpoint(eager=True)
-    except Exception:  # noqa: BLE001 — Py4JJavaError, resolver bug
+    except Exception as exc:  # noqa: BLE001 — Py4JJavaError, resolver bug
+        log.warning("localCheckpoint failed (%s); falling back to an RDD round-trip", type(exc).__name__)
         spark = df.sparkSession
         return spark.createDataFrame(df.rdd, df.schema).localCheckpoint(eager=True)
 
 
-def _min_neighbor(e: DataFrame) -> DataFrame:
-    """min(v) per u, output columns (mu, mn) with FRESH attribute ids —
-    joining a frame with an aggregate of itself on same-exprId columns
-    trips Catalyst's relation dedup under localCheckpoint (observed
-    NoSuchElementException in AttributeMap on Spark 4.1.2)."""
-    return e.groupBy("u").agg(F.min("v").alias("mn")).select(
-        F.col("u").alias("mu"), F.col("mn")
-    )
+_BROADCAST_MAX_ROWS_DEFAULT = 2_000_000
 
 
-def connected_components(
-    edges: DataFrame, max_iterations: int = 25, algorithm: str = "hashmin"
-) -> DataFrame:
+@functools.lru_cache(maxsize=8)
+def _broadcast_max_rows(raw: str | None) -> int:
+    """Parse the RML_BROADCAST_MAX_ROWS value once per distinct string;
+    a malformed value falls back to the default with one warning."""
+    try:
+        return _BROADCAST_MAX_ROWS_DEFAULT if raw is None else int(raw)
+    except ValueError:
+        log.warning("RML_BROADCAST_MAX_ROWS=%r is not an integer; using %d", raw, _BROADCAST_MAX_ROWS_DEFAULT)
+        return _BROADCAST_MAX_ROWS_DEFAULT
+
+
+def hint_broadcast(df: DataFrame, rows: int) -> DataFrame:
+    """Join-strategy gate (guide §3.1 "broadcast the side that fits"):
+    ``df`` hinted broadcast when ``rows`` is at most RML_BROADCAST_MAX_ROWS
+    (default 2M), else returned unchanged.
+
+    Frames out of ``_materialize`` carry no size statistics, so Catalyst
+    never broadcasts them on its own; callers pass an exact row count
+    taken over checkpointed blocks. At ~100-200 B/row built, the default
+    is a few hundred MB, far under the 8 GB broadcast hard cap. Over the
+    cap (web scale) the shuffle join is kept; ``=0`` forces it."""
+    if rows <= _broadcast_max_rows(os.environ.get("RML_BROADCAST_MAX_ROWS")):
+        return F.broadcast(df)
+    return df
+
+
+def connected_components(edges: DataFrame, max_iterations: int = 25) -> DataFrame:
     """edges(src,dst) -> (node, component) with component = min node id
     in the component (string comparison if ids are strings — callers
-    should zero-pad or cast for numeric semantics).
-
-    ``algorithm``: "hashmin" (default, label propagation + pointer
-    jumping) or "star" (alternating large/small star contraction) —
-    identical output, different round structure (see module docstring).
-    """
-    if algorithm not in ("hashmin", "star"):
-        raise ValueError(f"unknown cc algorithm: {algorithm!r}")
-    spark = edges.sparkSession
+    should zero-pad or cast for numeric semantics)."""
     # Root cause of the sporadic localCheckpoint crashes in this loop:
     # UnionBase.rewriteConstraints (constraint propagation across union
     # children whose attribute maps went stale under relation dedup,
     # Spark 4.1.2). Constraints buy nothing for this loop's plans (no
     # filters to infer), so disable propagation for its duration.
-    with constraint_propagation_disabled(spark):
-        if algorithm == "star":
-            return _cc_loop(edges, max_iterations)
+    with constraint_propagation_disabled(edges.sparkSession):
         return _cc_loop_hashmin(edges, max_iterations)
 
 
@@ -165,26 +149,11 @@ def _cc_loop_hashmin(edges: DataFrame, max_iterations: int) -> DataFrame:
             F.least(F.col("u"), F.col("mn")).alias("comp"),
         )
     )
-    # Join-strategy gate for the label table (guide §3.1 "broadcast the
-    # side that fits"). localCheckpoint returns a LogicalRDD with no
-    # size statistics (sizeInBytes = defaultSizeInBytes = huge), so
-    # Catalyst can never pick a broadcast join on its own and every
-    # pointer jump + convergence probe paid full shuffle joins — at
-    # bench scale that is ~19 sequential stage barriers whose scheduling
-    # latency, not compute, dominated cc wall time (measured: 14 task-
-    # seconds spread over 5 s wall). When the label table is small
-    # enough to ship (~100-200 B/row in the built relation, so the
-    # default 2M-node cap is a few hundred MB — inside the §3.1 comfort
-    # band and far under the 8 GB broadcast hard cap), hint it broadcast:
-    # the probe collapses to one stage over the checkpointed edge blocks
-    # and the jump's map side stops shuffling. |V| is known exactly (one
-    # cheap count over checkpointed blocks) and constant across rounds;
-    # at web scale |V| exceeds the cap and the loop keeps the pure
-    # shuffle joins unchanged.
+    # Label-table gate: shuffled, the jumps + probes were ~19 sequential
+    # stage barriers at bench scale (14 task-seconds over 5 s wall);
+    # broadcast, the probe is one stage over the edge blocks. |V| is
+    # exact and constant across rounds.
     n_nodes = lab.count()
-    bcast_labels = n_nodes <= int(
-        os.environ.get("RML_CC_BROADCAST_MAX_NODES", "2000000")
-    )
     for _ in range(max_iterations):
         # propagate: comp'(v) = min(comp(v), min over neighbors comp(u))
         upd = sym.join(lab, sym["u"] == lab["node"]).select(
@@ -199,9 +168,9 @@ def _cc_loop_hashmin(edges: DataFrame, max_iterations: int) -> DataFrame:
         # pointer jump: comp''(v) = comp'(comp'(v)) — doubling keeps the
         # round count logarithmic in component diameter. Alias-qualified
         # refs: derived-frame df["col"] mis-resolves on self-joins.
-        m = lab2.select(F.col("node").alias("jn"), F.col("comp").alias("jc"))
-        if bcast_labels:
-            m = F.broadcast(m)
+        m = hint_broadcast(
+            lab2.select(F.col("node").alias("jn"), F.col("comp").alias("jc")), n_nodes
+        )
         lab = _materialize(
             lab2.alias("L")
             .join(m.alias("R"), F.col("L.comp") == F.col("R.jn"), "left")
@@ -223,13 +192,10 @@ def _cc_loop_hashmin(edges: DataFrame, max_iterations: int) -> DataFrame:
         # one full round earlier than waiting for two identical label
         # signatures (r9, probe on the u<v half-edge set, early-out
         # via limit 1).
-        lab_a = lab.alias("A")
-        lab_b = lab.alias("B")
-        if bcast_labels:
-            # both hints broadcast the SAME checkpointed frame, so the
-            # exchange is built once and reused for the second join
-            lab_a = F.broadcast(lab_a)
-            lab_b = F.broadcast(lab_b)
+        # both hints broadcast the SAME checkpointed frame, so the
+        # exchange is built once and reused for the second join
+        lab_a = hint_broadcast(lab.alias("A"), n_nodes)
+        lab_b = hint_broadcast(lab.alias("B"), n_nodes)
         inconsistent = (
             e.join(lab_a, e["u"] == F.col("A.node"))
             .join(lab_b, e["v"] == F.col("B.node"))
@@ -242,102 +208,6 @@ def _cc_loop_hashmin(edges: DataFrame, max_iterations: int) -> DataFrame:
     return lab.select("node", F.col("comp").alias("component"))
 
 
-# round index from which the stable-signature safety net starts running
-# (star contraction is O(log n) rounds — 4 at sf0.1, ~8 on the 4.1M-edge
-# chain stress; the oscillation guard only matters past the healthy range)
-_SIG_CHECK_FROM = 10
-
-
-def _cc_loop(edges: DataFrame, max_iterations: int) -> DataFrame:
-    e = _materialize(_canonical_edges(edges))
-    prev_sig = None
-
-    # Implementation notes:
-    # * large-star gathers neighbors over the SYMMETRIZED edge set each
-    #   round (the Kiveris formulation) — gathering over the directed
-    #   remnant of the previous round stalls on depth>=2 trees.
-    # * exactly TWO materializations per round (e2 and e): the
-    #   localCheckpoint after each star step cuts lineage AND isolates
-    #   the relation-with-aggregate-of-itself join shapes that crash
-    #   checkpoint normalization on Spark 4.1.2 (the constraint-
-    #   propagation switch in connected_components is the root fix; the
-    #   e2/e checkpoints keep each round's plan two-star-steps deep).
-    #   Round-1 additionally checkpointed the min-neighbor aggregates —
-    #   dropping those two cut cc wall time ~33% at sf0.1 with the
-    #   400k-edge long-chain+hub stress still exact.
-    # * convergence = edge-set fixpoint, checked by (count, hash-sum)
-    #   signature — one cheap aggregate per round, no extra join.
-    for round_idx in range(max_iterations):
-        # no distinct on the symmetrized set: e is already distinct with
-        # u != v, so sym contains each direction exactly once — there is
-        # nothing to dedup (the min aggregate and e2's distinct would
-        # absorb dups anyway). Dropping it removes one full-width
-        # shuffle per round; results verified identical (golden pytest +
-        # sf0.1 component count + 4.1M-edge stress).
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        # large-star: (v, min(Γ(u) ∪ {u})) for every neighbor v > u
-        mn = _min_neighbor(sym.union(sym.select(F.col("u"), F.col("u").alias("v"))))
-        e2 = _materialize(
-            sym.filter(F.col("v") > F.col("u"))
-            .join(mn, F.col("u") == F.col("mu"))
-            .select(F.col("v").alias("u"), F.col("mn").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star over the (now high->low oriented) edges: every node in
-        # Γ(u) ∪ {u} links to min(Γ(u) ∪ {u})
-        mn2 = _min_neighbor(e2.union(e2.select(F.col("u"), F.col("u").alias("v"))))
-        j = e2.join(mn2, F.col("u") == F.col("mu")).select("u", "v", "mn")
-        small = j.select(F.col("u"), F.col("mn").alias("v")).union(
-            j.select(F.col("v").alias("u"), F.col("mn").alias("v"))
-        )
-        e = _materialize(small.filter(F.col("u") != F.col("v")).distinct())
-
-        # Converged when every edge points at a component root: a root
-        # never appears as a source, so any (a.v == b.u) chain with a
-        # strictly smaller continuation means another round is needed.
-        # Detects the fixpoint one full round earlier than waiting for
-        # two identical edge sets (a round = 3 materializations; this
-        # check is one semi-join with limit 1).
-        chains = (
-            e.alias("a")
-            .join(e.alias("b"), F.col("a.v") == F.col("b.u"), "inner")
-            .filter(F.col("b.v") < F.col("a.v"))
-            .limit(1)
-            .count()
-        )
-        if chains == 0:
-            break
-        # safety net: stable-signature exit (guards pathological inputs
-        # where the chain check alone might oscillate). Deferred until
-        # rounds real graphs never reach (star-contraction converges in
-        # O(log n) rounds; sf0.1 takes 4): the signature agg is a full
-        # extra pass over e EVERY round, and in the normal regime it can
-        # never fire before the chain check does — so skip the job while
-        # the round counter is in the healthy range (r4, A/B-measured).
-        if round_idx < _SIG_CHECK_FROM:
-            continue
-        sig = e.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),  # order-independent, no ANSI overflow
-        ).collect()[0]
-        sig = (sig["n"], sig["h"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-
-    nodes = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    roots = (
-        e.select(F.col("v").alias("node"))
-        .distinct()
-        .join(e.select(F.col("u").alias("node")).distinct(), "node", "left_anti")
-        .withColumn("component", F.col("node"))
-    )
-    comp = nodes.union(roots).groupBy("node").agg(F.min("component").alias("component"))
-    # isolated nodes never appear in edges; callers union them if needed
-    return comp
-
-
 def canonicalize_triples(triples: DataFrame, same_as_edges: DataFrame) -> DataFrame:
     """Rewrite subject/object IRIs through the canonical map produced by
     connected components over sameAs edges (entity merge).
@@ -347,18 +217,15 @@ def canonicalize_triples(triples: DataFrame, same_as_edges: DataFrame) -> DataFr
     (LogicalRDD, no size statistics — Catalyst estimates it huge), so
     without a hint BOTH rewrite joins shuffle the full triple table by
     s/o. The map's true size is one cheap count over the checkpointed
-    blocks: under RML_CC_BROADCAST_MAX_NODES (default 2M rows, a few
-    hundred MB built — far under the 8 GB broadcast cap) the map is
-    hinted broadcast and the triple table never shuffles; at web scale
-    the map is billions of rows, the gate stays off, and the
-    shuffle-join path must remain correct (tested with the gate forced
-    off)."""
+    blocks: under the ``hint_broadcast`` cap the map is hinted broadcast
+    and the triple table never shuffles; at web scale the map is
+    billions of rows, the gate stays off, and the shuffle-join path must
+    remain correct (tested with the gate forced off)."""
     comp = connected_components(same_as_edges)
     mapping = comp.filter(F.col("node") != F.col("component")).select(
         F.col("node"), F.col("component").alias("canon")
     )
-    if mapping.count() <= int(os.environ.get("RML_CC_BROADCAST_MAX_NODES", "2000000")):
-        mapping = F.broadcast(mapping)
+    mapping = hint_broadcast(mapping, mapping.count())
     t = triples
     for col in ("s", "o"):
         m = mapping.withColumnRenamed("node", f"__{col}_node").withColumnRenamed("canon", f"__{col}_canon")

@@ -23,8 +23,6 @@ Scale design:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -197,7 +195,7 @@ def minhash_dedup_pairs(
     Exactly ONE full-corpus shingle pass remains. ``materialize=False``
     restores the fully lazy composition (streaming/incremental callers
     that fold this into a larger plan)."""
-    from .cc import _materialize
+    from .cc import _materialize, hint_broadcast
 
     sigs = minhash_signatures(df, text_col, id_col, k, num_hashes)
     if materialize:
@@ -217,16 +215,12 @@ def minhash_dedup_pairs(
         # the WHOLE CORPUS by id just to filter it against the candidate
         # list. The candidate-id list is small by construction (only
         # near-dup documents appear in any pair) and its exact size is
-        # one cheap count over the checkpointed blocks; under the cap
-        # (~100-200 B/row built, so the 1M-pair default is well inside
-        # guide §3.1's comfort band) broadcast it and the corpus never
+        # one cheap count over the checkpointed blocks, 2 ids per pair;
+        # under the cap (the default is 1M pairs, well inside guide
+        # §3.1's comfort band) broadcast it and the corpus never
         # shuffles. Over the cap — boilerplate-heavy corpora at web
         # scale — the shuffle semi-join path is kept unchanged.
-        n_cand_pairs = cands.count()
-        if 2 * n_cand_pairs <= int(
-            os.environ.get("RML_DEDUP_BROADCAST_MAX_CAND_IDS", "2000000")
-        ):
-            cand_ids = F.broadcast(cand_ids)
+        cand_ids = hint_broadcast(cand_ids, 2 * cands.count())
     need = df.join(cand_ids, F.col(id_col) == F.col("__cand_id"), "left_semi")
     words = F.split(normalize_text(F.col(text_col)), " ")
     n = F.size(words)
@@ -398,7 +392,7 @@ def keep_canonical(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> D
     correctness-debt item)."""
     from pyspark.sql import types as T
 
-    from .cc import connected_components
+    from .cc import connected_components, hint_broadcast
 
     edges = pairs.select(
         F.col("id_a").cast("string").alias("src"), F.col("id_b").cast("string").alias("dst")
@@ -427,6 +421,5 @@ def keep_canonical(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> D
     # unchanged. (Broadcasting ``keep`` as well was measured SLOWER at
     # bench scale — the nested broadcast builds serialize on the
     # driver — so only the corpus-facing join is hinted.)
-    if comps.count() <= int(os.environ.get("RML_CC_BROADCAST_MAX_NODES", "2000000")):
-        drop = F.broadcast(drop)
+    drop = hint_broadcast(drop, comps.count())
     return df.join(drop, df[id_col] == F.col("drop_id"), "left_anti")

@@ -472,15 +472,18 @@ def _iterate_docs_df(df: DataFrame, payload_col: str, ls: LogicalSource, refs: l
     sits between the outer opener and the first close). A document is
     therefore nested iff some extracted fragment contains a second
     ``<tag`` opener past position 1, probed with a plain substring
-    ``locate`` over the fragments (NO second regex pass over the full
-    payload — r02's opener-count regex cost +84% on pages_pipeline; and
-    no ``rlike`` in the lambda — per-fragment regex probes measured 5x
-    slower in r01). The prefix probe is conservative: a tag whose name
-    extends the iterator tag (``<tagged>``) false-positives into the
-    Python tree-walking path, which is slower but always correct.
-    Nested documents route to the tree walker; the rest explode the
-    fragment array. Both branches union to one frame; passthrough
-    survives all paths."""
+    ``locate`` over the fragments. This probe is the only nesting
+    detector and is always on: skipping it would silently drop the
+    records of nested documents, and opener-count passes over the full
+    payload (a second regex, ``regexp_count``, replace+length) all
+    measured slower (r02's opener-count regex cost +84% on
+    pages_pipeline), as did per-fragment ``rlike`` probes (5x, r01).
+    The prefix probe is conservative: a tag whose name extends the
+    iterator tag (``<tagged>``) false-positives into the Python
+    tree-walking path, which is slower but always correct. Nested and
+    namespaced (``xmlns``) documents route to the tree walker; the rest
+    explode the fragment array. Both branches union to one frame;
+    passthrough survives all paths."""
     ns_json = ls.options.get("xpath.namespaces") if ls.kind == "xpath" else None
     if ns_json:
         # declared prefix map: Clark-name matching only exists on the
@@ -499,35 +502,10 @@ def _iterate_docs_df(df: DataFrame, payload_col: str, ls: LogicalSource, refs: l
             with_frags = df.withColumn(
                 "__frags", F.regexp_extract_all(F.col(payload_col), F.lit(frag_pat), F.lit(0))
             )
-            detect = os.environ.get("RML_XML_NESTED_DETECT", "1")
             opener = "<" + tag
-            if detect == "count":
-                # alternative detector: literal opener count via
-                # replace+length vs fragment count (kept for A/B —
-                # measured slower than the probe: the replace allocates
-                # the full rewritten payload per row)
-                n_opener_chars = F.length(payload_col) - F.length(
-                    F.replace(F.col(payload_col), F.lit(opener), F.lit(""))
-                )
-                nested = F.coalesce(
-                    n_opener_chars > F.size("__frags") * len(opener), F.lit(False)
-                )
-            elif detect == "rcount":
-                # alternative detector: regexp_count opener pass (no
-                # match-array allocation, unlike r02's regexp_extract_all)
-                nested = F.coalesce(
-                    F.regexp_count(F.col(payload_col), F.lit(rf"<{tag}[\s/>]"))
-                    > F.size("__frags"),
-                    F.lit(False),
-                )
-            elif detect != "0":
-                # default: substring probe over the already-extracted
-                # fragments; opt out for corpora known flat (=0)
-                nested = F.coalesce(
-                    F.exists("__frags", lambda f: F.locate(opener, f, 2) > 0), F.lit(False)
-                )
-            else:
-                nested = F.lit(False)
+            nested = F.coalesce(
+                F.exists("__frags", lambda f: F.locate(opener, f, 2) > 0), F.lit(False)
+            )
             # namespaced documents route to the tree walker regardless of
             # nesting: the fragment regex misses prefixed tags entirely
             # (<d:data>) and from_xml field names shift under xmlns; the

@@ -1,10 +1,12 @@
-"""Property-based tests (hypothesis) for the driver-side front-end and a
-union-find oracle for connected components on pseudo-random graphs."""
+"""Property-based tests (hypothesis) for the mapping front-end, and
+connected components on a pseudo-random graph against the union-find
+oracle (naive_cc.py)."""
 
 import hashlib
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from naive_cc import components as union_find_components
 
 from rml_utils_processor_ts_spark.plans.model import parse_concat_reference
 from rml_utils_processor_ts_spark.plans.turtle import Term, parse_turtle
@@ -103,36 +105,6 @@ def test_concat_reference_roundtrip(pieces):
 
 # -- connected components vs union-find oracle --------------------------------
 
-def _union_find_components(edges):
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
-    for a, b in edges:
-        union(a, b)
-    # path-compress fully, label by min member
-    comp = {}
-    for node in list(parent):
-        root = find(node)
-        comp.setdefault(root, []).append(node)
-    out = {}
-    for members in comp.values():
-        m = min(members)
-        for node in members:
-            out[node] = m
-    return out
-
-
 def test_cc_matches_union_find_on_pseudorandom_graph(spark):
     """Deterministic pseudo-random graph (md5-driven): chains, hubs, and
     cross links; distributed CC must equal the exact union-find labels."""
@@ -145,7 +117,7 @@ def test_cc_matches_union_find_on_pseudorandom_graph(spark):
             edges.append((a, b))
     # a hot hub
     edges += [("hub0", f"n{i:04d}") for i in range(0, 50)]
-    expected = _union_find_components(edges)
+    expected = union_find_components(edges)
 
     from rml_utils_processor_ts_spark.operators.cc import connected_components
 

@@ -306,58 +306,6 @@ mappings:
 
 
 # ---------------------------------------------------------------------------
-# CC: hashmin default vs star loop (r9 round-structure change)
-# ---------------------------------------------------------------------------
-
-
-def test_cc_hashmin_equals_star_on_pseudorandom_graph(spark):
-    """Both loop structures must produce the identical (node, component)
-    labeling — the star loop doubles as an independent oracle for the
-    new hashmin default (tools/cc_experiment.py measured them equal on
-    the 4.1M-edge stress; this pins it in CI on a mixed graph)."""
-    import hashlib
-
-    from rml_utils_processor_ts_spark.operators.cc import connected_components
-
-    edges = []
-    for i in range(400):
-        h = int(hashlib.md5(f"r9e{i}".encode()).hexdigest()[:8], 16)
-        a, b = f"n{h % 200:04d}", f"n{(h // 200) % 200:04d}"
-        if a != b:
-            edges.append((a, b))
-    edges += [("hub", f"n{i:04d}") for i in range(30)]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    got_h = {(r["node"], r["component"]) for r in connected_components(df).collect()}
-    got_s = {
-        (r["node"], r["component"])
-        for r in connected_components(df, algorithm="star").collect()
-    }
-    assert got_h == got_s and got_h
-
-
-def test_cc_hashmin_deep_chain_within_round_budget(spark):
-    """A 200-deep chain converges under the default max_iterations via
-    pointer doubling (O(log d) rounds, not O(d))."""
-    from rml_utils_processor_ts_spark.operators.cc import connected_components
-
-    edges = [(f"c{i:04d}", f"c{i + 1:04d}") for i in range(200)]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    comp = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    assert set(comp.values()) == {"c0000"}
-    assert len(comp) == 201
-
-
-def test_cc_unknown_algorithm_raises(spark):
-    import pytest as _pytest
-
-    from rml_utils_processor_ts_spark.operators.cc import connected_components
-
-    df = spark.createDataFrame([("a", "b")], "src string, dst string")
-    with _pytest.raises(ValueError, match="unknown cc algorithm"):
-        connected_components(df, algorithm="bogus")
-
-
-# ---------------------------------------------------------------------------
 # JSONPath: recursive-descent / dotted iterators fell into the key fast
 # path and silently yielded zero records (r9)
 # ---------------------------------------------------------------------------

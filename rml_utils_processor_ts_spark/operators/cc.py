@@ -44,7 +44,7 @@ log = logging.getLogger(__name__)
 # toggling it independently can re-enable it mid-localCheckpoint in the
 # other thread and resurrect the Spark 4.1.2 UnionBase.rewriteConstraints
 # crash. One reentrant lock serializes every guarded region (cc loops,
-# snapshot/micro-batch materialization).
+# every _materialize, including those nested inside a cc loop).
 _CP_LOCK = threading.RLock()
 _CP_KEY = "spark.sql.constraintPropagation.enabled"
 
@@ -61,19 +61,21 @@ def constraint_propagation_disabled(spark):
 
 
 def _materialize(df: DataFrame) -> DataFrame:
-    """Truncate lineage between CC rounds (iterative DataFrame jobs grow
-    exponential plans otherwise). Fast path: localCheckpoint. Spark
-    4.1.2's checkpoint normalization sporadically crashes with
-    NoSuchElementException in AttributeMap on plans whose union/join
-    branches share attribute ids; fall back to an RDD roundtrip (same
+    """Compute ``df`` once and truncate its lineage (CC rounds, CDC
+    records, a run's triples before its state commit). Fast path:
+    localCheckpoint with constraint propagation disabled — Spark 4.1.2's
+    UnionBase.rewriteConstraints crashes on plans whose union branches
+    share a relation. If it still fails (the sporadic AttributeMap
+    NoSuchElementException), fall back to an RDD roundtrip (same
     lineage cut, pays one Python serde pass). On a real cluster this is
     ``checkpoint()`` against the HDFS checkpoint dir."""
-    try:
-        return df.localCheckpoint(eager=True)
-    except Exception as exc:  # noqa: BLE001 — Py4JJavaError, resolver bug
-        log.warning("localCheckpoint failed (%s); falling back to an RDD round-trip", type(exc).__name__)
-        spark = df.sparkSession
-        return spark.createDataFrame(df.rdd, df.schema).localCheckpoint(eager=True)
+    spark = df.sparkSession
+    with constraint_propagation_disabled(spark):
+        try:
+            return df.localCheckpoint(eager=True)
+        except Exception as exc:  # noqa: BLE001 — Py4JJavaError, resolver bug
+            log.warning("localCheckpoint failed (%s); falling back to an RDD round-trip", type(exc).__name__)
+            return spark.createDataFrame(df.rdd, df.schema).localCheckpoint(eager=True)
 
 
 _BROADCAST_MAX_ROWS_DEFAULT = 2_000_000

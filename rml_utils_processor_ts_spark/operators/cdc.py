@@ -20,10 +20,19 @@ The publisher id is part of the composite state key (a groupBy-key
 column, not a file-name rewrite): the Spark fix for the reference's
 false-delete hazard documented at rml.ts:302-320.
 
+Each event joins the current entities against its own state table:
+left-anti for create, inner for update, semi-then-anti for delete (all
+AQE-managed, on (iri, publisher)). The executor checkpoints each
+stateful source once per execution, so the emitted triples and the
+three new-state frames read one iteration of the source.
+:func:`cdc_diff` is the single full-outer-join form of the same
+classification; it backs the gated ``cdc_diff`` query, not the
+executor.
+
 State is a versioned parquet table per state id (Iceberg-style snapshot
 dirs + a latest pointer) — resumable, atomic repoint, time-travelable.
 At cluster scale the same layout is an Iceberg table written with
-MERGE INTO; the join is an AQE-managed full-outer on (iri, publisher).
+MERGE INTO.
 """
 
 from __future__ import annotations

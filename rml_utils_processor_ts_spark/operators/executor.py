@@ -18,8 +18,10 @@ Scale notes (100 TB design point):
     map-side only, zero shuffles. The only shuffles in a mapping run are
     referencing-object-map joins and the final distinct, both AQE-managed
     (skew-join split + partition coalescing enabled in get_spark()).
-  * CDC (stateful FnO subjects) is a full-outer-join against a versioned
-    parquet state table (Iceberg-style snapshot dirs) — see cdc.py.
+  * CDC (stateful FnO subjects) joins each event's current entities
+    against its versioned state table (Iceberg-style snapshot dirs) —
+    see cdc.py. A stateful source is iterated once per execution into a
+    checkpoint that the triples and every state update read.
 """
 
 from __future__ import annotations
@@ -41,6 +43,7 @@ from ..plans.model import (
 )
 from ..functions.xsdlex import canonicalize_typed
 from ..sources.registry import records_df, ref_column_name
+from .cc import _materialize
 from .terms import (
     compile_datatype,
     compile_language,
@@ -402,7 +405,7 @@ class PlanExecutor:
                             + [r for jc in pom.join_conditions for r in jc.parent.references()],
                         )
 
-    def _records(self, ls: LogicalSource, refs: list[str]) -> DataFrame:
+    def _records(self, ls: LogicalSource, refs: list[str], *, checkpoint: bool = False) -> DataFrame:
         all_refs = set(refs) | getattr(self, "_source_refs", {}).get(ls.key(), set())
         key = (ls.key(), tuple(sorted(all_refs)))
         if key not in self._scan_cache:
@@ -424,6 +427,8 @@ class PlanExecutor:
                 # plan bindings let an rml:query JOIN other bound tables
                 table_views=getattr(self, "_bindings", None),
             )
+        if checkpoint:
+            self._scan_cache[key] = _materialize(self._scan_cache[key])
         return self._scan_cache[key]
 
     # -- execution ---------------------------------------------------------
@@ -479,6 +484,15 @@ class PlanExecutor:
         return kept, skipped
 
     def execute(self, plan: MappingPlan) -> ExecutionResult:
+        """Compile ``plan`` into one triples frame plus, for CDC plans,
+        one new-state frame per state table.
+
+        Lazy for every plan without a stateful (CDC) TriplesMap. A CDC
+        plan runs one Spark job per logical source that a stateful
+        TriplesMap reads: the source is iterated once, here, into a
+        checkpoint, and the triples and every state update read that
+        copy — otherwise each consumer (the triples and each state
+        table's commit) re-iterates the source."""
         by_name = {tm.name: tm for tm in plan.triples_maps}
         self._bindings = dict(plan.source_bindings)
         self._plan_source_refs(plan, by_name)
@@ -492,6 +506,13 @@ class PlanExecutor:
                     return ExecutionResult(
                         triples=self._empty_triples(), skipped=skipped
                     )
+        stateful_sources = {
+            tm.logical_source.key(): tm.logical_source
+            for tm in plan.triples_maps
+            if stateful_subject_spec(tm.subject_map.term_map) is not None
+        }
+        for ls in stateful_sources.values():
+            self._records(ls, [], checkpoint=True)
         frames: list[DataFrame] = []
         state_updates: dict[str, DataFrame] = {}
 

@@ -24,6 +24,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 
+from ..operators.cc import _materialize
 from ..operators.cdc import StateStore
 from ..operators.executor import ExecutionResult, PlanExecutor
 from ..plans.model import MappingPlan
@@ -116,16 +117,16 @@ class MicroBatchMappingRunner:
                 publisher_regex=self.publisher_regex,
             )
             result = ex.execute(bound)
-            from .snapshots import _materialize_triples
-
             # materialize before the state commit (same invariant as the
             # snapshot runner: a batch's output must not observe its own
             # state update)
-            result.triples = _materialize_triples(result.triples)
+            result.triples = _materialize(result.triples)
         finally:
-            # the triples are materialized — the batch frame is no longer
-            # referenced; keeping it registered would pin every runner's
-            # last batch for the life of the process
+            # execute() iterated the batch frame once into a checkpoint
+            # that the triples and the state updates read, so nothing
+            # references the batch frame any more; keeping it registered
+            # would pin every runner's last batch for the life of the
+            # process
             unregister_memory_source(self._key)
         if self._store is not None:
             self._store.commit_all(result.state_updates)

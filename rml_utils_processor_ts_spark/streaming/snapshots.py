@@ -21,6 +21,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
+from ..operators.cc import _materialize
 from ..operators.cdc import StateStore
 from ..operators.executor import ExecutionResult, PlanExecutor
 from ..plans.model import MappingPlan
@@ -113,12 +114,15 @@ class SnapshotRunner:
                 publisher_regex=self.publisher_regex,
             )
             result = ex.execute(bound)
-            # Materialize before the state commit: the run's output must
-            # not observe its own state update. Executor-side checkpoint
-            # (never a driver collect — a table-backed source would pull
-            # the whole triple set through the driver; on a cluster this
-            # is checkpoint() against the checkpoint dir).
-            result.triples = _materialize_triples(result.triples)
+            # Materialize before the state commit: computed lazily after
+            # commit_all, the triples could read the state this run just
+            # wrote (a table-backed backend resolves its current snapshot
+            # when a query runs). Neither they nor the state updates
+            # re-iterate a stateful source: both read the checkpoint
+            # execute() made of it. Executor-side checkpoint (never a
+            # driver collect — a table-backed source would pull the whole
+            # triple set through the driver).
+            result.triples = _materialize(result.triples)
             if store is not None:
                 store.commit_all(result.state_updates)
             merged = result if merged is None else ExecutionResult(
@@ -127,21 +131,6 @@ class SnapshotRunner:
         assert merged is not None, "no mappings registered"
         self.results.append(merged)
         return merged
-
-
-def _materialize_triples(df):
-    """localCheckpoint with the Spark 4.1.2 guard: constraint propagation
-    disabled during normalization (UnionBase.rewriteConstraints crashes on
-    CDC plans whose union branches share a relation — same root cause and
-    shared lock as operators/cc.py), RDD-roundtrip fallback."""
-    from ..operators.cc import constraint_propagation_disabled
-
-    spark = df.sparkSession
-    with constraint_propagation_disabled(spark):
-        try:
-            return df.localCheckpoint(eager=True)
-        except Exception:  # noqa: BLE001 — Py4JJavaError, resolver bug
-            return spark.createDataFrame(df.rdd, df.schema).localCheckpoint(eager=True)
 
 
 def _rebind_tm(tm, bindings: dict[str, str]):

@@ -3,7 +3,7 @@
 stateful mapping assert per-run Create/Update/Delete events."""
 
 import pytest
-from fixtures import RML_STATEFUL, XML_DOC, XML_DOC_V2, XML_DOC_V3_DROPPED
+from fixtures import RML_BASIC, RML_STATEFUL, XML_DOC, XML_DOC_V2, XML_DOC_V3_DROPPED
 
 from rml_utils_processor_ts_spark.operators.cdc import StateStore
 from rml_utils_processor_ts_spark.operators.executor import PlanExecutor
@@ -263,3 +263,97 @@ def test_cdc_through_custom_state_backend(spark, tmp_path):
     assert isinstance(StateStore(spark, str(tmp_path / "st2")), StateBackend)
     with pytest.raises(NotImplementedError, match="iceberg-spark-runtime"):
         IcebergStateStore(spark, "no_such_catalog.ns")
+
+
+def test_microbatch_iterates_each_stateful_source_once(spark, tmp_path):
+    """One scan per stateful execution: a batch's documents are iterated
+    once, not once per consumer (the triples plus the create, update and
+    delete state tables). A Python UDF in the batch frame counts how
+    often its rows are read; one batch must read exactly what one forced
+    iteration of the same frame reads (per row, once per branch of the
+    XML iterator's fragment/walker union). The events and the committed
+    state are those of
+    test_streaming.py::test_microbatch_rml_stream_cdc_sequence."""
+    from pyspark.sql import functions as F
+
+    from rml_utils_processor_ts_spark.plans.model import LogicalSource
+    from rml_utils_processor_ts_spark.sources.registry import (
+        records_df,
+        register_memory_source,
+        unregister_memory_source,
+    )
+    from rml_utils_processor_ts_spark.streaming.microbatch import MicroBatchMappingRunner
+
+    reads = spark.sparkContext.accumulator(0)
+
+    def touch(doc):
+        reads.add(1)
+        return doc
+
+    touch_udf = F.udf(touch, "string")
+
+    def doc_frame(docs):
+        return spark.createDataFrame([(d,) for d in docs], "doc string").select(
+            touch_udf("doc").alias("doc")
+        )
+
+    def reads_of(action):
+        before = reads.value
+        out = action()
+        return reads.value - before, out
+
+    def one_scan(docs):
+        register_memory_source("one_scan", doc_frame(docs))
+        try:
+            ls = LogicalSource(source="memory:one_scan", kind="xpath", iterator="//data")
+            n, _ = reads_of(
+                lambda: records_df(spark, ls, ["@id"]).write.format("noop").mode("overwrite").save()
+            )
+        finally:
+            unregister_memory_source("one_scan")
+        assert n >= len(docs)
+        return n
+
+    state_root = str(tmp_path / "state")
+    runner = MicroBatchMappingRunner(
+        spark, RML_STATEFUL.format(source="dataset/data.xml"), state_root=state_root
+    )
+
+    def run_batch(batch_id, docs):
+        n, result = reads_of(lambda: runner.process_batch(doc_frame(docs), batch_id))
+        events = {
+            (r["s"], r["o"].rsplit("#", 1)[-1])
+            for r in result.triples.collect()
+            if r["p"] == LIFECYCLE
+        }
+        return n, events
+
+    docs_v1 = ['<r><data id="001" label="a"/></r>', '<r><data id="002" label="b"/></r>']
+    docs_v2 = ['<r><data id="001" label="CHANGED"/></r>', '<r><data id="002" label="b"/></r>']
+    assert run_batch(0, docs_v1) == (
+        one_scan(docs_v1),
+        {(EX + "001", "Create"), (EX + "002", "Create")},
+    )
+    assert run_batch(1, docs_v2) == (one_scan(docs_v2), {(EX + "001", "Update")})
+
+    store = StateStore(spark, state_root)
+    for state_id in ("/tmp/create_state", "/tmp/update_state", "/tmp/delete_state"):
+        assert {r["iri"] for r in store.read(state_id).collect()} == {EX + "001", EX + "002"}
+
+
+def test_plain_plan_execute_starts_no_jobs(spark):
+    """Only CDC plans scan inside execute(): a plan without stateful
+    TriplesMaps compiles to a lazy frame and starts no Spark job."""
+    sc = spark.sparkContext
+    plan = parse_mapping(RML_BASIC.format(source="d.xml"), {"d.xml": "inline:" + XML_DOC})
+    group = "test_plain_plan_execute_starts_no_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        triples = PlanExecutor(spark).execute(plan).triples
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert triples.count() == 4
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

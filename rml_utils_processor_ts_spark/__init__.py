@@ -15,7 +15,10 @@ The reference's three processors map onto:
 
 from __future__ import annotations
 
+import logging
 import os
+
+log = logging.getLogger(__name__)
 
 __version__ = "0.1.0"
 
@@ -49,9 +52,15 @@ def get_spark(app_name: str = "rml_spark", cpus: str | None = None):
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
     # local mode: shuffle files on tmpfs kill disk-latency variance (a
-    # real cluster has NVMe-local shuffle dirs; this is the sandbox twin)
+    # real cluster has NVMe-local shuffle dirs; this is the sandbox twin).
+    # Spark ignores spark.local.dir when SPARK_LOCAL_DIRS is set, so the
+    # tmpfs directory is not created then.
     shm = "/dev/shm/spark-local"
-    if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
+    if (
+        "SPARK_LOCAL_DIRS" not in os.environ
+        and os.path.isdir("/dev/shm")
+        and os.access("/dev/shm", os.W_OK)
+    ):
         os.makedirs(shm, exist_ok=True)
         builder = builder.config("spark.local.dir", shm)
     spark = builder.getOrCreate()
@@ -117,8 +126,8 @@ def _warm_session(spark) -> None:
         except Exception:  # noqa: BLE001
             pass
         spark.conf.set("spark.rml.warmed", "1")
-    except Exception:  # noqa: BLE001 — warm-up is best-effort only
-        pass
+    except Exception as exc:  # noqa: BLE001 — warm-up is best-effort only
+        log.warning("session warm-up failed (%s); serving without it", type(exc).__name__)
 
 
 def _warm_mapping_path(spark, base: str) -> None:

@@ -40,6 +40,7 @@ from __future__ import annotations
 import hashlib
 import os
 import re
+from dataclasses import replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -192,7 +193,9 @@ def execute_stateful_tm(
     resolve,
     by_name: dict[str, TriplesMap],
 ):
-    """Run one CDC TriplesMap; returns (frames, state_updates)."""
+    """Run one CDC TriplesMap; returns (frames, state_updates). The
+    emitted entities project through the executor's one projector, with
+    the event frame's ``__s`` as the subject."""
     if executor.state_store is None:
         raise ValueError(f"TriplesMap {tm.name} uses stateful FnO functions but no state_store configured")
     event = fn.function_iri
@@ -245,7 +248,7 @@ def execute_stateful_tm(
             ["__s", "__publisher"],
             "left_semi",
         )
-        frames, _ = executor._project_tm(tm, emit, resolve, F.col("__s"), by_name)
+        frames = executor._project([tm], emit, resolve, by_name, F.col("__s"))
         return frames, {state_id: new_state}
 
     if event == voc.IDLAB_IMPLICIT_UPDATE:
@@ -266,7 +269,7 @@ def execute_stateful_tm(
             ["__s", "__publisher"],
             "left_semi",
         )
-        frames, _ = executor._project_tm(tm, emit, resolve, F.col("__s"), by_name)
+        frames = executor._project([tm], emit, resolve, by_name, F.col("__s"))
         return frames, {state_id: new_state}
 
     if event == voc.IDLAB_IMPLICIT_DELETE:
@@ -283,13 +286,21 @@ def execute_stateful_tm(
             current_entities
         )
         # deleted subjects have no source record: project constant-only POMs
-        # (rdf:type / lifecycle) from the state rows themselves.
+        # (rdf:type / lifecycle) from the state rows themselves (the
+        # reference keeps only rdf:type/lifecycle POMs on delete TMs,
+        # src/rml/incrml.ts:554-576).
         emit = deleted.select(
             F.col("iri").alias("__s"), F.col("publisher").alias("__publisher")
         )
-        frames, _ = executor._project_tm(
-            tm, emit, _null_resolver(), F.col("__s"), by_name, lifecycle_only=True
+        lifecycle_tm = replace(
+            tm,
+            predicate_object_maps=[
+                pom
+                for pom in tm.predicate_object_maps
+                if pom.parent_triples_map is not None or pom.object.constant is not None
+            ],
         )
+        frames = executor._project([lifecycle_tm], emit, _null_resolver(), by_name, F.col("__s"))
         return frames, {state_id: new_state}
 
     raise ValueError(f"unknown stateful function {event}")

@@ -5,8 +5,8 @@ This replaces the reference's subprocess execution of the Java RMLMapper
 DataFrame plan per mapping:
 
     scan (shared per logical source) -> iterator explode (Arrow UDF or
-    builtin) -> term-map projection (array<struct> -> explode) ->
-    referencing-object-map equi-joins -> LDES versioning -> union ->
+    builtin) -> term-map projection incl. LDES versioning (array<struct>
+    -> explode) -> referencing-object-map equi-joins -> union ->
     dropDuplicates -> target routing.
 
 Scale notes (100 TB design point):
@@ -14,10 +14,11 @@ Scale notes (100 TB design point):
     it (the reference re-reads the snapshot file per mapping; we dedupe
     scans at compile time). Only referenced columns are selected, so
     parquet column pruning + predicate pushdown apply.
-  * The per-TM projection is a single ``explode(array(struct...))`` —
-    map-side only, zero shuffles. The only shuffles in a mapping run are
-    referencing-object-map joins and the final distinct, both AQE-managed
-    (skew-join split + partition coalescing enabled in get_spark()).
+  * The projection of all TriplesMaps over one source is a single
+    ``explode(array(struct...))`` — map-side only, zero shuffles. The
+    only shuffles in a mapping run are referencing-object-map joins and
+    the final distinct, both AQE-managed (skew-join split + partition
+    coalescing enabled in get_spark()).
   * CDC (stateful FnO subjects) joins each event's current entities
     against its versioned state table (Iceberg-style snapshot dirs) —
     see cdc.py. A stateful source is iterated once per execution into a
@@ -44,6 +45,7 @@ from ..plans.model import (
 from ..functions.xsdlex import canonicalize_typed
 from ..sources.registry import records_df, ref_column_name
 from .cc import _materialize
+from .cdc import execute_stateful_tm, watched_references
 from .terms import (
     compile_datatype,
     compile_language,
@@ -223,41 +225,6 @@ def _compile_object(om, resolve) -> Column:
     return obj
 
 
-def _obj_struct(
-    pred: Column,
-    obj: Column,
-    ttype: Column,
-    dtype: Column,
-    lang: Column,
-    target: Column,
-    g_override: Column | None = None,
-    *,
-    emit_g_override: bool = False,
-) -> Column:
-    # g_override carries a POM-level graph (R2RML §9); null means "use
-    # the subject map's graph column" (coalesced at the final select).
-    # The field exists ONLY when the TriplesMap actually has POM-level
-    # graph maps (emit_g_override) — an always-present null field rode
-    # in every struct of every plan and measurably widened the explode
-    # (r6 A/B/A: nquads_lines +19%). All structs of one TM share the
-    # flag so the explode array stays schema-homogeneous.
-    fields = [
-        pred.alias("p"),
-        obj.cast("string").alias("o"),
-        ttype.alias("o_termtype"),
-        dtype.alias("o_datatype"),
-        lang.alias("o_lang"),
-        target.alias("target_id"),
-    ]
-    if emit_g_override:
-        fields.append(
-            (g_override if g_override is not None else F.lit(None).cast("string")).alias(
-                "g_override"
-            )
-        )
-    return F.struct(*fields)
-
-
 # How many runtime-datatypeMap canonicalization chains may share one
 # fused projection. Each chain inlines four canonical_* regexp CASE arms
 # (~4 KB of generated code); janino's per-method limit is 64 KB and a
@@ -378,8 +345,6 @@ class PlanExecutor:
 
         def add(ls_key: str, refs) -> None:
             self._source_refs.setdefault(ls_key, set()).update(refs)
-
-        from .cdc import watched_references
 
         for tm in plan.triples_maps:
             add(tm.logical_source.key(), _collect_refs(tm))
@@ -506,33 +471,39 @@ class PlanExecutor:
                     return ExecutionResult(
                         triples=self._empty_triples(), skipped=skipped
                     )
-        stateful_sources = {
-            tm.logical_source.key(): tm.logical_source
-            for tm in plan.triples_maps
-            if stateful_subject_spec(tm.subject_map.term_map) is not None
-        }
-        for ls in stateful_sources.values():
+        # Operator fusion: every non-stateful TriplesMap (plain or LDES)
+        # over the same logical source projects in ONE pass — one scan +
+        # one explode for the whole group, instead of one scan per
+        # TriplesMap (the reference runs the jar once per mapping file;
+        # a fused group is the Spark-native inverse of that). A stateful
+        # (CDC) TriplesMap projects alone, over its event's emit frame.
+        fuse_groups: dict[str, list[TriplesMap]] = {}
+        stateful_tms: list[TriplesMap] = []
+        for tm in plan.triples_maps:
+            if stateful_subject_spec(tm.subject_map.term_map) is None:
+                fuse_groups.setdefault(tm.logical_source.key(), []).append(tm)
+            else:
+                stateful_tms.append(tm)
+        for ls in {tm.logical_source.key(): tm.logical_source for tm in stateful_tms}.values():
             self._records(ls, [], checkpoint=True)
         frames: list[DataFrame] = []
         state_updates: dict[str, DataFrame] = {}
-
-        # Operator fusion: every plain TriplesMap (no stateful subject, no
-        # LDES rewrite) over the same logical source projects in ONE pass —
-        # one scan + one explode for the whole group, instead of one scan
-        # per TriplesMap (the reference runs the jar once per mapping file;
-        # a fused group is the Spark-native inverse of that).
-        fuse_groups: dict[str, list[TriplesMap]] = {}
-        rest: list[TriplesMap] = []
-        for tm in plan.triples_maps:
-            lt = tm.subject_map.logical_target
-            if stateful_subject_spec(tm.subject_map.term_map) is None and not (lt and lt.is_ldes):
-                fuse_groups.setdefault(tm.logical_source.key(), []).append(tm)
-            else:
-                rest.append(tm)
         for tms in fuse_groups.values():
-            frames.extend(self._fused_frames(tms, by_name))
-        for tm in rest:
-            tm_frames, tm_state = self._execute_tm(tm, by_name)
+            records = self._records(tms[0].logical_source, [])
+            frames.extend(self._project(tms, records, _resolver(set(records.columns)), by_name))
+        for tm in stateful_tms:
+            # _records unions the plan's source refs (iri, watched
+            # property, publisher_ref) into its key: this is the frame
+            # checkpointed above
+            records = self._records(tm.logical_source, [])
+            tm_frames, tm_state = execute_stateful_tm(
+                self,
+                tm,
+                stateful_subject_spec(tm.subject_map.term_map),
+                records,
+                _resolver(set(records.columns)),
+                by_name,
+            )
             frames.extend(tm_frames)
             state_updates.update(tm_state)
         if not frames:
@@ -549,44 +520,21 @@ class PlanExecutor:
             triples = triples.dropDuplicates(TRIPLE_COLUMNS)
         return ExecutionResult(triples=triples, state_updates=state_updates, skipped=skipped)
 
-    def _execute_tm(self, tm: TriplesMap, by_name: dict[str, TriplesMap]):
-        refs = _collect_refs(tm)
-        stateful = stateful_subject_spec(tm.subject_map.term_map)
-        if stateful is not None:
-            from .cdc import watched_references
-
-            extra: list[str] = []
-            p = stateful.params.get(voc.IDLAB_IRI)
-            if p is not None:
-                extra.extend(p.references())
-            w = stateful.params.get(voc.IDLAB_WATCHED_PROPERTY)
-            if w is not None:
-                extra.extend(watched_references(w))
-            refs = refs + [r for r in extra if r not in refs]
-            if self.publisher_ref is not None and self.publisher_ref not in refs:
-                refs = refs + [self.publisher_ref]
-        records = self._records(tm.logical_source, refs)
-        rec_cols = set(records.columns)
-        resolve = _resolver(rec_cols)
-
-        if stateful is not None:
-            from .cdc import execute_stateful_tm
-
-            return execute_stateful_tm(self, tm, stateful, records, resolve, by_name)
-
-        subject = compile_term_map(tm.subject_map.term_map, resolve, "subject")
-        return self._project_tm(tm, records, resolve, subject, by_name)
-
-    def _fused_frames(self, tms: list[TriplesMap], by_name: dict[str, TriplesMap]) -> list[DataFrame]:
-        """Project a group of same-source plain TriplesMaps in one pass:
-        per-record array of fully-formed quad structs (subject/graph/
-        target embedded per struct) -> one explode. Referencing-object-map
-        joins still produce their own frames (they shuffle anyway) but
-        reuse the same record scan."""
-        ls = tms[0].logical_source
-        records = self._records(ls, [])
-        resolve = _resolver(set(records.columns))
-
+    def _project(
+        self,
+        tms: list[TriplesMap],
+        records: DataFrame,
+        resolve,
+        by_name: dict[str, TriplesMap],
+        subject: Column | None = None,
+    ) -> list[DataFrame]:
+        """Term-map projection (B6-B8, B13) for a group of TriplesMaps
+        over one records frame, in one pass: per-record array of
+        fully-formed quad structs (subject/graph/target embedded per
+        struct) -> one explode. Referencing-object-map joins still
+        produce their own frames (they shuffle anyway) but reuse the same
+        record scan. ``subject``, given for a one-TriplesMap group, replaces
+        its compiled subject (CDC: the event frame's ``__s`` column)."""
         # Materialize each TM's subject IRI (template + IRI-encode, the
         # most expensive term expression) and graph ONCE per record:
         # they recur in every quad struct of the TM, and Generate does
@@ -594,7 +542,11 @@ class PlanExecutor:
         # encode/regex chain once per STRUCT (3x+ per row) and inflated
         # the codegen unit (measured on rml_customer_triples, PLANS.md).
         subj_cols = [
-            compile_term_map(tm.subject_map.term_map, resolve, "subject").alias(f"__subj_{i}")
+            (
+                subject
+                if subject is not None
+                else compile_term_map(tm.subject_map.term_map, resolve, "subject")
+            ).alias(f"__subj_{i}")
             for i, tm in enumerate(tms)
         ]
         graph_cols = [
@@ -618,16 +570,41 @@ class PlanExecutor:
         ]
         records = records.select("*", *subj_cols, *graph_cols)
         records = _stage_in_batches(records, dtmap_cols)
+        ldes = {
+            i: tm.subject_map.logical_target
+            for i, tm in enumerate(tms)
+            if tm.subject_map.logical_target is not None and tm.subject_map.logical_target.is_ldes
+        }
+        if ldes:
+            # LDES versioned members (B13): the version timestamp comes
+            # from the record's ldes_ts_col, else the executor's
+            # version_ts — deterministic, never wall-clock (reference
+            # behavior README.md:43); an immutable member's subject is
+            # the base subject + "#" + timestamp
+            ts = (
+                F.date_format(F.col(self.ldes_ts_col), "yyyy-MM-dd'T'HH:mm:ss'Z'")
+                if self.ldes_ts_col in records.columns
+                else F.lit(self.version_ts or "1970-01-01T00:00:00Z")
+            )
+            records = records.withColumn("__ts", ts).select(
+                "*",
+                *[
+                    F.concat(F.col(f"__subj_{i}"), F.lit("#"), F.col("__ts")).alias(f"__vsubj_{i}")
+                    for i, lt in ldes.items()
+                    if lt.ldes_immutable_iri
+                ],
+            )
 
         quad_structs: list[Column] = []
         frames: list[DataFrame] = []
         for i, tm in enumerate(tms):
-            subject = F.col(f"__subj_{i}")
+            lt = ldes.get(i)
+            s_col = F.col(f"__vsubj_{i}" if lt is not None and lt.ldes_immutable_iri else f"__subj_{i}")
             s_ttype = effective_term_type(tm.subject_map.term_map, "subject")
             graph = F.col(f"__g_{i}")
             target = self._target_id(tm)
 
-            def quad(pred: Column, obj: Column, ttype, dtype=None, lang=None, *, subject=subject, s_ttype=s_ttype, graph=graph, target=target) -> Column:
+            def quad(pred: Column, obj: Column, ttype, dtype=None, lang=None, *, subject=s_col, s_ttype=s_ttype, graph=graph, target=target) -> Column:
                 lang_col = lang if lang is not None else F.lit(None).cast("string")
                 dtype_col = dtype if dtype is not None else F.lit(None).cast("string")
                 return F.struct(
@@ -644,11 +621,32 @@ class PlanExecutor:
 
             for cls in tm.subject_map.classes:
                 quad_structs.append(quad(F.lit(voc.RDF_TYPE), F.lit(cls), "IRI"))
+            if lt is not None:
+                if lt.ldes_immutable_iri:
+                    # rmlt:ldesGenerateImmutableIRI: the dct:isVersionOf
+                    # link from the member version back to the base entity
+                    quad_structs.append(
+                        quad(
+                            F.lit(lt.ldes_version_of_path or voc.DCT_IS_VERSION_OF),
+                            F.col(f"__subj_{i}"),
+                            "IRI",
+                        )
+                    )
+                quad_structs.append(
+                    quad(
+                        F.lit(lt.ldes_timestamp_path or voc.DCT_MODIFIED),
+                        F.col("__ts"),
+                        "Literal",
+                        F.lit(_XSD_DATETIME),
+                    )
+                )
+                if lt.ldes_base_iri:
+                    frames.extend(self._ldes_stream_frames(tm, records, s_col, graph))
             tm_join_poms = [
                 pom for pom in tm.predicate_object_maps if pom.parent_triples_map is not None
             ]
             if tm_join_poms:
-                base = records.withColumn("__s", subject).filter(F.col("__s").isNotNull())
+                base = records.withColumn("__s", s_col).filter(F.col("__s").isNotNull())
                 for grp in _group_join_poms(tm_join_poms):
                     frames.append(self._join_pom(tm, grp, base, resolve, graph, by_name))
             for j, pom in enumerate(tm.predicate_object_maps):
@@ -686,14 +684,69 @@ class PlanExecutor:
                         )
 
         if quad_structs:
-            exploded = (
-                records.withColumn("__q", F.explode(F.array(*quad_structs)))
-                .select("__q.*")
-                .filter(F.col("s").isNotNull() & F.col("o").isNotNull())
-                .select(*TRIPLE_COLUMNS)
+            exploded = records.withColumn("__q", F.explode(F.array(*quad_structs)))
+            if subject is None:
+                exploded = exploded.select("__q.*")
+            else:
+                # a given subject (one TriplesMap) is every quad's subject:
+                # taking `s` and its term type from outside the generator
+                # keeps the emit frame's hash partitioning on the subject,
+                # which the final dedupe then reuses instead of shuffling
+                # the triples once more
+                exploded = exploded.select(
+                    s_col.alias("s"),
+                    F.lit(s_ttype).alias("s_termtype"),
+                    *[F.col(f"__q.{c}") for c in TRIPLE_COLUMNS[2:]],
+                )
+            exploded = exploded.filter(F.col("s").isNotNull() & F.col("o").isNotNull()).select(
+                *TRIPLE_COLUMNS
             )
             frames.insert(0, exploded)
         return frames
+
+    def _ldes_stream_frames(
+        self, tm: TriplesMap, records: DataFrame, member: Column, graph: Column
+    ) -> list[DataFrame]:
+        """rmlt:ldesBaseIRI names the event stream itself: every member
+        hangs off it via tree:member, and the stream's metadata (type/
+        timestampPath/versionOfPath/tree:shape) is emitted once per run —
+        the quads an LDES consumer needs to traverse the stream
+        (reference: src/rml/incrml.ts:303-338). The member quads have
+        the stream, not the member, as subject, so they leave the
+        TriplesMap's explode."""
+        lt = tm.subject_map.logical_target
+        members = records.select(
+            F.lit(lt.ldes_base_iri).alias("s"),
+            F.lit("IRI").alias("s_termtype"),
+            F.lit(voc.TREE_MEMBER).alias("p"),
+            member.alias("o"),
+            F.lit("IRI").alias("o_termtype"),
+            F.lit(None).cast("string").alias("o_datatype"),
+            F.lit(None).cast("string").alias("o_lang"),
+            graph.alias("g"),
+            F.lit(lt.target_id).alias("target_id"),
+        ).filter(F.col("o").isNotNull())
+        meta = [(voc.RDF_TYPE, voc.LDES_EVENT_STREAM)]
+        meta.append((voc.LDES_TIMESTAMP_PATH, lt.ldes_timestamp_path or voc.DCT_MODIFIED))
+        meta.append((voc.LDES_VERSION_OF_PATH, lt.ldes_version_of_path or voc.DCT_IS_VERSION_OF))
+        if lt.ldes_shape:
+            meta.append((voc.TREE_SHAPE, lt.ldes_shape))
+        # metadata has no record context: it can only share the members'
+        # graph when the graph map is CONSTANT (a record-dependent graph
+        # map leaves it in the default graph) — splitting type/shape away
+        # from tree:member rows would strand the stream description
+        gm = tm.subject_map.graph_map
+        meta_graph = gm.constant if gm is not None and gm.constant is not None else None
+        return [
+            members,
+            self.spark.createDataFrame(
+                [
+                    (lt.ldes_base_iri, "IRI", p, o, "IRI", None, None, meta_graph, lt.target_id)
+                    for p, o in meta
+                ],
+                ", ".join(f"{c} string" for c in TRIPLE_COLUMNS),
+            ),
+        ]
 
     def _graph_column(self, tm: TriplesMap, resolve) -> Column:
         gm = tm.subject_map.graph_map
@@ -733,217 +786,6 @@ class PlanExecutor:
         if pom.logical_target is not None and pom.logical_target.target_id not in ids:
             ids.append(pom.logical_target.target_id)
         return ids or ["default"]
-
-    def _project_tm(
-        self,
-        tm: TriplesMap,
-        records: DataFrame,
-        resolve,
-        subject: Column,
-        by_name: dict[str, TriplesMap],
-        lifecycle_only: bool = False,
-    ):
-        """Project one TriplesMap into (s,p,o,g) rows: subject + graph +
-        array of (p,o) structs -> explode (B6-B8)."""
-        # stage runtime datatypeMap objects as named columns (janino
-        # method-size guard — see the twin comment in _fused_frames)
-        dtmap_idx = [
-            idx
-            for idx, pom in enumerate(tm.predicate_object_maps)
-            if pom.parent_triples_map is None
-            and pom.object is not None
-            and pom.object.datatype_map is not None
-        ]
-        if dtmap_idx:
-            records = _stage_in_batches(
-                records,
-                [
-                    (f"__objp_{idx}", _compile_object(tm.predicate_object_maps[idx].object, resolve))
-                    for idx in dtmap_idx
-                ],
-            )
-        lt = tm.subject_map.logical_target
-        graph = self._graph_column(tm, resolve)
-        target_id = self._target_id(tm)
-        s_ttype = effective_term_type(tm.subject_map.term_map, "subject")
-        # the g_override struct field + final coalesce exist only when
-        # this TM has inline POM-level graph maps (join POMs route
-        # graphs inside _join_pom)
-        has_pom_graphs = any(
-            pom.graph_map is not None and pom.parent_triples_map is None
-            for pom in tm.predicate_object_maps
-        )
-
-        structs: list[Column] = []
-        for cls in tm.subject_map.classes:
-            structs.append(
-                _obj_struct(
-                    F.lit(voc.RDF_TYPE),
-                    F.lit(cls),
-                    F.lit("IRI"),
-                    F.lit(None).cast("string"),
-                    F.lit(None).cast("string"),
-                    F.lit(target_id),
-                    emit_g_override=has_pom_graphs,
-                )
-            )
-        join_poms: list[PredicateObjectMap] = []
-        for idx, pom in enumerate(tm.predicate_object_maps):
-            if pom.parent_triples_map is not None:
-                join_poms.append(pom)
-                continue
-            pred = compile_term_map(pom.predicate, resolve, "predicate")
-            obj = F.col(f"__objp_{idx}") if idx in dtmap_idx else _compile_object(pom.object, resolve)
-            if pom.predicate.constant is None:
-                # null predicate generation -> no triple (R2RML §11.1);
-                # free for constant predicates
-                obj = F.when(pred.isNotNull(), obj)
-            ttype = effective_term_type(pom.object, "object")
-            dtype_col = compile_datatype(pom.object, resolve)
-            lang_col = compile_language(pom.object, resolve)
-            if lifecycle_only and pom.object.constant is None:
-                # delete events have no source record: only constant POMs
-                # survive (reference keeps only rdf:type/lifecycle POMs on
-                # delete TMs, /root/reference/src/rml/incrml.ts:554-576)
-                continue
-            pom_graphs: list[Column | None] = [None]  # None = subject graph
-            pg_guard: Column | None = None
-            if pom.graph_map is not None:
-                pg = compile_term_map(pom.graph_map, resolve, "graph")
-                pom_graphs = [None, pg] if tm.subject_map.graph_map is not None else [pg]
-                if pom.graph_map.constant is None:
-                    # data-derived POM graph: a null evaluation is a data
-                    # error — DROP the quad (null the object; the explode
-                    # filter removes it) rather than silently rerouting
-                    # it to the subject/default graph via the coalesce
-                    pg_guard = pg
-            for tid in self._pom_target_ids(tm, pom):
-                for g_ov in pom_graphs:
-                    obj_c = obj
-                    if g_ov is not None and pg_guard is not None:
-                        obj_c = F.when(pg_guard.isNotNull(), obj)
-                    structs.append(
-                        _obj_struct(
-                            pred,
-                            obj_c,
-                            F.lit(ttype),
-                            dtype_col,
-                            lang_col,
-                            F.lit(tid),
-                            g_override=g_ov,
-                            emit_g_override=has_pom_graphs,
-                        )
-                    )
-
-        base = records.withColumn("__s", subject).filter(F.col("__s").isNotNull())
-
-        # LDES versioned members (B13): version IRI derived from warc_ts —
-        # deterministic, never wall-clock (reference behavior README.md:43).
-        ldes_frames: list[DataFrame] = []
-        if lt is not None and lt.is_ldes:
-            ts_col = (
-                F.date_format(F.col(self.ldes_ts_col), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-                if self.ldes_ts_col in records.columns
-                else F.lit(self.version_ts or "1970-01-01T00:00:00Z")
-            )
-            base = base.withColumn("__ts", ts_col)
-            base = base.withColumn("__base_s", F.col("__s"))
-            if lt.ldes_immutable_iri:
-                # rmlt:ldesGenerateImmutableIRI: unique member version IRIs
-                # + the dct:isVersionOf link back to the base entity
-                base = base.withColumn(
-                    "__s", F.concat(F.col("__s"), F.lit("#"), F.col("__ts"))
-                )
-                structs.append(
-                    _obj_struct(
-                        F.lit(lt.ldes_version_of_path or voc.DCT_IS_VERSION_OF),
-                        F.col("__base_s"),
-                        F.lit("IRI"),
-                        F.lit(None).cast("string"),
-                        F.lit(None).cast("string"),
-                        F.lit(target_id),
-                        emit_g_override=has_pom_graphs,
-                    )
-                )
-            structs.append(
-                _obj_struct(
-                    F.lit(lt.ldes_timestamp_path or voc.DCT_MODIFIED),
-                    F.col("__ts"),
-                    F.lit("Literal"),
-                    F.lit(_XSD_DATETIME),
-                    F.lit(None).cast("string"),
-                    F.lit(target_id),
-                    emit_g_override=has_pom_graphs,
-                )
-            )
-            if lt.ldes_base_iri:
-                # rmlt:ldesBaseIRI names the event stream itself: every
-                # member hangs off it via tree:member, and the stream's
-                # metadata (type/timestampPath/versionOfPath/tree:shape)
-                # is emitted once per run — the quads an LDES consumer
-                # needs to traverse the stream
-                # (/root/reference/src/rml/incrml.ts:303-338).
-                ldes_frames.append(
-                    base.select(
-                        F.lit(lt.ldes_base_iri).alias("s"),
-                        F.lit("IRI").alias("s_termtype"),
-                        F.lit(voc.TREE_MEMBER).alias("p"),
-                        F.col("__s").alias("o"),
-                        F.lit("IRI").alias("o_termtype"),
-                        F.lit(None).cast("string").alias("o_datatype"),
-                        F.lit(None).cast("string").alias("o_lang"),
-                        graph.alias("g"),
-                        F.lit(target_id).alias("target_id"),
-                    )
-                )
-                meta = [(voc.RDF_TYPE, voc.LDES_EVENT_STREAM)]
-                meta.append((voc.LDES_TIMESTAMP_PATH, lt.ldes_timestamp_path or voc.DCT_MODIFIED))
-                meta.append((voc.LDES_VERSION_OF_PATH, lt.ldes_version_of_path or voc.DCT_IS_VERSION_OF))
-                if lt.ldes_shape:
-                    meta.append((voc.TREE_SHAPE, lt.ldes_shape))
-                # metadata has no record context: it can only share the
-                # members' graph when the graph map is CONSTANT (a
-                # record-dependent graph map leaves it in the default
-                # graph) — splitting type/shape away from tree:member
-                # rows would strand the stream description
-                gm = tm.subject_map.graph_map
-                meta_graph = gm.constant if gm is not None and gm.constant is not None else None
-                ldes_frames.append(
-                    self.spark.createDataFrame(
-                        [
-                            (lt.ldes_base_iri, "IRI", p, o, "IRI", None, None, meta_graph, target_id)
-                            for p, o in meta
-                        ],
-                        ", ".join(f"{c} string" for c in TRIPLE_COLUMNS),
-                    )
-                )
-
-        frames: list[DataFrame] = list(ldes_frames)
-        if structs:
-            g_col = (
-                F.coalesce(F.col("__pom.g_override"), graph) if has_pom_graphs else graph
-            )
-            exploded = (
-                base.withColumn("__pom", F.explode(F.array(*structs)))
-                .select(
-                    F.col("__s").alias("s"),
-                    F.lit(s_ttype).alias("s_termtype"),
-                    F.col("__pom.p").alias("p"),
-                    F.col("__pom.o").alias("o"),
-                    F.col("__pom.o_termtype").alias("o_termtype"),
-                    F.col("__pom.o_datatype").alias("o_datatype"),
-                    F.col("__pom.o_lang").alias("o_lang"),
-                    g_col.alias("g"),
-                    F.col("__pom.target_id").alias("target_id"),
-                )
-                .filter(F.col("o").isNotNull())
-            )
-            frames.append(exploded)
-
-        for grp in _group_join_poms(join_poms):
-            frames.append(self._join_pom(tm, grp, base, resolve, graph, by_name))
-
-        return frames, {}
 
     def _join_pom(
         self,

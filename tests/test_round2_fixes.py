@@ -210,24 +210,3 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_customer_b")
 
 
-def test_fused_group_mixed_subject_termtypes(spark):
-    """Fused same-source projection carries a per-TriplesMap s_termtype."""
-    mapping = """
-ex:m1 a rr:TriplesMap ;
-    rml:logicalSource [ rml:source "table:/root/testdata/sf0.001/region.parquet" ;
-        rml:referenceFormulation <urn:rml-spark:ql/Table> ] ;
-    rr:subjectMap [ rr:template "http://x/r/{r_regionkey}" ] ;
-    rr:predicateObjectMap [ rr:predicateMap [ rr:constant <http://x/name> ] ;
-        rr:objectMap [ rml:reference "r_name" ] ] .
-
-ex:m2 a rr:TriplesMap ;
-    rml:logicalSource [ rml:source "table:/root/testdata/sf0.001/region.parquet" ;
-        rml:referenceFormulation <urn:rml-spark:ql/Table> ] ;
-    rr:subjectMap [ rr:template "r{r_regionkey}" ; rr:termType rr:BlankNode ] ;
-    rr:predicateObjectMap [ rr:predicateMap [ rr:constant <http://x/name> ] ;
-        rr:objectMap [ rml:reference "r_name" ] ] .
-"""
-    rows = execute_mapping(spark, mapping).triples.collect()
-    ttypes = {r["s"]: r["s_termtype"] for r in rows}
-    assert ttypes["http://x/r/0"] == "IRI"
-    assert ttypes["r0"] == "BlankNode"

@@ -1,7 +1,8 @@
 """Round-7 regression tests: the five driver-ADVICE items (function-param
 @base corruption, language/datatype term-type default, constant-literal
-lang/datatype propagation, XPath round() semantics, POM-graph null drop
-semantics) plus the persisted-index atomic-publish concurrency fix."""
+lang/datatype propagation, XPath round() semantics; the POM-graph null
+drop tests live in test_projection.py) plus the persisted-index
+atomic-publish concurrency fix."""
 
 import threading
 
@@ -97,67 +98,6 @@ def test_xpath_substring_round_half_up():
     assert _xpath_substring("12345", 2.5, None) == "345"
     assert _xpath_substring("12345", 0.0, 3.0) == "12"  # window clips at pos 1
     assert _xpath_substring("12345", -0.5, 4.0) == "123"
-
-
-def test_pom_graph_null_drops_quad_fused(spark):
-    """A data-derived POM-level graph map that evaluates to null is a
-    data error: the quad is DROPPED, not rerouted to the default graph
-    (driver ADVICE r6). The subject-graph twin quad (R2RML §9 union)
-    still emits. Fused (plain-TM) path."""
-    mapping = """
-ex:m a rr:TriplesMap ;
-  rml:logicalSource [ rml:source "d.json" ; rml:iterator "$.[*]" ;
-      rml:referenceFormulation ql:JSONPath ] ;
-  rr:subjectMap [ rr:template "http://ex.org/s/{id}" ] ;
-  rr:predicateObjectMap [ rr:predicate ex:name ;
-      rr:objectMap [ rml:reference "name" ] ;
-      rr:graphMap [ rr:template "http://ex.org/g/{grp}" ] ] .
-"""
-    data = 'inline:[{"id": "1", "name": "a", "grp": "x"}, {"id": "2", "name": "b"}]'
-    res = execute_mapping(spark, mapping, {"d.json": data})
-    got = {(r["s"], r["o"], r["g"]) for r in res.triples.collect()}
-    assert got == {("http://ex.org/s/1", "a", "http://ex.org/g/x")}
-
-
-def test_pom_graph_null_drops_quad_project_tm(spark):
-    """Same drop semantics on the non-fused (_project_tm) path — forced
-    through it via an LDES logical target on the subject map."""
-    mapping = """
-ex:m a rr:TriplesMap ;
-  rml:logicalSource [ rml:source "d.json" ; rml:iterator "$.[*]" ;
-      rml:referenceFormulation ql:JSONPath ] ;
-  rr:subjectMap [ rr:template "http://ex.org/s/{id}" ;
-      rml:logicalTarget [ a rmlt:EventStreamTarget ] ] ;
-  rr:predicateObjectMap [ rr:predicate ex:name ;
-      rr:objectMap [ rml:reference "name" ] ;
-      rr:graphMap [ rr:template "http://ex.org/g/{grp}" ] ] .
-"""
-    data = 'inline:[{"id": "1", "name": "a", "grp": "x"}, {"id": "2", "name": "b"}]'
-    res = execute_mapping(spark, mapping, {"d.json": data})
-    name_rows = {
-        (r["s"], r["o"], r["g"])
-        for r in res.triples.filter(F.col("p") == "http://example.org/name").collect()
-    }
-    assert name_rows == {("http://ex.org/s/1", "a", "http://ex.org/g/x")}
-
-
-def test_g_override_field_absent_without_pom_graphs(spark):
-    """Perf contract for the r6 regression: a TM with no POM-level graph
-    maps must not carry the g_override struct field through its explode
-    (the always-present null field measurably widened nquads_lines)."""
-    mapping = """
-ex:m a rr:TriplesMap ;
-  rml:logicalSource [ rml:source "d.json" ; rml:iterator "$.[*]" ;
-      rml:referenceFormulation ql:JSONPath ] ;
-  rr:subjectMap [ rr:template "http://ex.org/s/{id}" ;
-      rml:logicalTarget [ a rmlt:EventStreamTarget ] ] ;
-  rr:predicateObjectMap [ rr:predicate ex:name ; rr:objectMap [ rml:reference "name" ] ] .
-"""
-    res = execute_mapping(spark, mapping, {"d.json": 'inline:[{"id": "1", "name": "a"}]'})
-    plan_str = res.triples._jdf.queryExecution().optimizedPlan().toString()
-    assert "g_override" not in plan_str
-    # the LDES target adds a dct:modified quad next to ex:name
-    assert res.triples.filter(F.col("p") == "http://example.org/name").count() == 1
 
 
 def test_ensure_index_concurrent_writers_and_readers(spark, tmp_path):

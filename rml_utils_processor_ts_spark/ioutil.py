@@ -12,13 +12,26 @@ scale), the gate never fires and the scan keeps its native splits.
 The gate is derived from the actual input layout (file count + bytes),
 not from a constant tuned to the sandbox: at 100 TB every table has
 thousands of splits and this is a no-op.
+
+``local_frame`` is how driver-held rows enter Spark: an inline document,
+an empty state table, stream metadata, ANN query tuples. It builds a
+``pyarrow.Table`` in the given Spark schema and hands it to
+``createDataFrame``, which plans a ``LocalTableScan``: one partition per
+row up to the session's parallelism (so a one-row document or metadata
+frame is one partition), and Catalyst may fold filters and projections
+over it at planning time. A Python list would instead be pickled into
+an RDD spread over ``defaultParallelism`` partitions
+(``Scan ExistingRDD``), and every scan of it would hand its rows through
+Python workers.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # inputs larger than this are "real" scans — never add a spreading
 # shuffle for them (env-tunable; 256 MB default keeps the worst-case
@@ -77,3 +90,23 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
 def read_parquet_spread(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet`` + :func:`spread_small_scan`."""
     return spread_small_scan(spark.read.parquet(path))
+
+
+def local_frame(spark: SparkSession, rows: Sequence[Sequence], schema: str | T.StructType) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s column order) as an Arrow local
+    relation: the plan is a ``LocalTableScan`` and no Python worker
+    touches the rows, with or without
+    ``spark.sql.execution.arrow.pyspark.enabled``. ``schema`` is a
+    ``StructType`` or a DDL string such as ``"doc string"``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=field.type) for col, field in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

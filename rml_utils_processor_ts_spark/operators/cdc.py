@@ -45,6 +45,7 @@ from dataclasses import replace
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ioutil import local_frame
 from ..plans import voc
 from ..plans.model import FunctionCall, TermMap, TriplesMap
 from ..state import StateBackend
@@ -145,8 +146,10 @@ class StateStore(StateBackend):
     def read(self, state_id: str) -> DataFrame:
         v = self._latest_version(state_id)
         if v == 0:
-            return self.spark.createDataFrame([], STATE_SCHEMA)
-        return self.spark.read.parquet(os.path.join(self._dir(state_id), f"v_{v}"))
+            return local_frame(self.spark, [], STATE_SCHEMA)
+        # the schema is always STATE_SCHEMA: passing it skips the
+        # footer-reading job schema inference would start
+        return self.spark.read.schema(STATE_SCHEMA).parquet(os.path.join(self._dir(state_id), f"v_{v}"))
 
     def commit(self, state_id: str, df: DataFrame) -> int:
         v = self._latest_version(state_id) + 1

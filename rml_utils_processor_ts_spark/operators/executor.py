@@ -43,6 +43,7 @@ from ..plans.model import (
     TriplesMap,
 )
 from ..functions.xsdlex import canonicalize_typed
+from ..ioutil import local_frame
 from ..sources.registry import records_df, ref_column_name
 from .cc import _materialize
 from .cdc import execute_stateful_tm, watched_references
@@ -399,9 +400,7 @@ class PlanExecutor:
     # -- execution ---------------------------------------------------------
 
     def _empty_triples(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [], ", ".join(f"{c} string" for c in TRIPLE_COLUMNS)
-        )
+        return local_frame(self.spark, [], ", ".join(f"{c} string" for c in TRIPLE_COLUMNS))
 
     def _drop_unresolvable_tms(self, plan: MappingPlan) -> tuple[list[TriplesMap], list[str]]:
         """on_missing_source='skip': pre-resolve every distinct logical
@@ -739,7 +738,8 @@ class PlanExecutor:
         meta_graph = gm.constant if gm is not None and gm.constant is not None else None
         return [
             members,
-            self.spark.createDataFrame(
+            local_frame(
+                self.spark,
                 [
                     (lt.ldes_base_iri, "IRI", p, o, "IRI", None, None, meta_graph, lt.target_id)
                     for p, o in meta

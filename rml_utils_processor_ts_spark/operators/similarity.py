@@ -14,6 +14,8 @@ import struct
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..ioutil import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
@@ -208,9 +210,9 @@ def write_lsh_index(
     # metadata goes through Spark so non-local index paths (hdfs://,
     # s3a://) work the same as local ones
     spark = emb.sparkSession
-    spark.createDataFrame(
-        [(dim, n_planes, seed)], "dim int, n_planes int, seed int"
-    ).coalesce(1).write.mode("overwrite").json(path + "/_lsh_meta")
+    local_frame(
+        spark, [(dim, n_planes, seed)], "dim int, n_planes int, seed int"
+    ).write.mode("overwrite").json(path + "/_lsh_meta")
     return meta
 
 
@@ -328,9 +330,7 @@ def lsh_index_topk(
         for bucket in py_probe_buckets(vec, planes, n_probe)
     ]
     buckets = sorted({b for _, _, b in q_tuples})
-    q = spark.createDataFrame(
-        q_tuples, "query_id long, qv array<double>, bucket string"
-    )
+    q = local_frame(spark, q_tuples, "query_id long, qv array<double>, bucket string")
     cand = idx.filter(F.col("bucket").isin(buckets))  # partition-pruned
     return _bucket_join_topk(cand, q, k, exclude_self=exclude_self)
 
@@ -552,10 +552,11 @@ def write_ivf_index(
     import json as _json
 
     spark = emb.sparkSession
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(dim, len(centroids), _json.dumps(centroids))],
         "dim int, n_cells int, centroids_json string",
-    ).coalesce(1).write.mode("overwrite").json(path + "/_ivf_meta")
+    ).write.mode("overwrite").json(path + "/_ivf_meta")
     return {"dim": dim, "n_cells": len(centroids)}
 
 
@@ -599,7 +600,7 @@ def ivf_index_topk(
         for cell in py_cell_ranking(vec, centroids, n_probe)
     ]
     cells = sorted({c for _, _, c in q_tuples})
-    q = spark.createDataFrame(q_tuples, "query_id long, qv array<double>, cell int")
+    q = local_frame(spark, q_tuples, "query_id long, qv array<double>, cell int")
     cand = idx.filter(F.col("cell").isin(cells))  # partition-pruned
     scored = cand.join(F.broadcast(q), "cell")
     if exclude_self:

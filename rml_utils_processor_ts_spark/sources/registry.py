@@ -19,7 +19,8 @@ Source location conventions:
 * ``kafka://broker/topic`` / rmls: blank nodes — Structured-Streaming
   Kafka scan; message values iterate like any document source (B5).
 * ``inline:<payload>``                  — document provided inline
-  (tests / snapshot pushes).
+  (tests / snapshot pushes); it enters Spark as one-partition Arrow
+  local data (``ioutil.local_frame``), so no Python worker scans it.
 * ``memory:<key>``                      — a registered DataFrame of
   documents (foreachBatch micro-batches, tests).
 
@@ -42,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..ioutil import local_frame, read_parquet_spread
 from ..plans.model import LogicalSource
 
 
@@ -644,8 +646,6 @@ def records_df(
             "reference (publisher_ref) for relational/CSV sources"
         )
     if src.startswith("table:") or ls.kind == "table":
-        from ..ioutil import read_parquet_spread
-
         path = src[len("table:"):] if src.startswith("table:") else src
         df = read_parquet_spread(spark, path)
         if ls.query:
@@ -670,8 +670,6 @@ def records_df(
         keep = [c for c in passthrough if c in df.columns]
         return df.select(*keep, *cols)
     if src.startswith("pages:") or ls.kind == "pages":
-        from ..ioutil import read_parquet_spread
-
         path = src[len("pages:"):] if src.startswith("pages:") else src
         pages = read_parquet_spread(spark, path)
         keep = [c for c in passthrough if c in pages.columns]
@@ -689,7 +687,11 @@ def records_df(
             import io
 
             pdf = pd.read_csv(io.StringIO(src[len("inline:"):]), sep=ls.delimiter, dtype=str)
-            df = spark.createDataFrame(pdf)
+            df = local_frame(
+                spark,
+                pdf.astype(object).where(pdf.notna(), None).values.tolist(),
+                T.StructType([T.StructField(c, T.StringType()) for c in pdf.columns]),
+            )
         else:
             df = spark.read.option("header", "true").option("delimiter", ls.delimiter).csv(src)
         cols = []
@@ -700,13 +702,13 @@ def records_df(
         return df.select(*cols)
     if ls.kind in ("xpath", "jsonpath"):
         if src.startswith("inline:"):
-            docs = spark.createDataFrame([(src[len("inline:"):],)], "doc string")
+            docs = local_frame(spark, [(src[len("inline:"):],)], "doc string")
         elif src.startswith(("http://", "https://")):
             # WoT/HTTP API logical source (td:Form/hctl:hasTarget,
             # /root/reference/test/rml.test.ts:299-320): the document is a
             # driver-side fetch — one snapshot per run, exactly the
             # reference's whole-document model.
-            docs = spark.createDataFrame([(fetch_http_source(src),)], "doc string")
+            docs = local_frame(spark, [(fetch_http_source(src),)], "doc string")
         else:
             docs = spark.read.text(src, wholetext=True).withColumnRenamed("value", "doc")
         docs, derived = _apply_doc_derived(docs, "doc", doc_derived, [])

@@ -23,6 +23,8 @@ import abc
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .ioutil import local_frame
+
 
 class StateBackend(abc.ABC):
     """Abstract snapshot-versioned key-value-table store."""
@@ -69,13 +71,13 @@ class InMemoryStateStore(StateBackend):
 
         snaps = self._versions.get(state_id)
         if not snaps:
-            return self.spark.createDataFrame([], STATE_SCHEMA)
+            return local_frame(self.spark, [], STATE_SCHEMA)
         schema, rows = snaps[-1]
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     def read_version(self, state_id: str, version: int) -> DataFrame:
         schema, rows = self._versions[state_id][version - 1]
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     def commit(self, state_id: str, df: DataFrame) -> int:
         # limit(max_rows + 1) bounds the driver transfer even when the
@@ -164,7 +166,7 @@ class IcebergStateStore(StateBackend):
         try:
             return self.spark.table(name)
         except Exception:  # noqa: BLE001 — table not created yet
-            return self.spark.createDataFrame([], STATE_SCHEMA)
+            return local_frame(self.spark, [], STATE_SCHEMA)
 
     def commit(self, state_id: str, df: DataFrame) -> int:
         name = self._table(state_id)

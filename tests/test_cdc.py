@@ -357,3 +357,42 @@ def test_plain_plan_execute_starts_no_jobs(spark):
         assert len(sc.statusTracker().getJobIdsForGroup(group)) > 0
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_steady_snapshot_job_budget(spark, tmp_path):
+    """Jobs of one steady snapshot: the third push of a 200-record XML
+    document through SnapshotRunner over a parquet state store, counted
+    in its own job group. Building the pushed document and the empty
+    state frames from a Python list pickled them into a multi-partition
+    RDD, and reading committed state inferred its schema with a footer
+    job per table: 34 jobs here. As Arrow local relations, with state
+    read under STATE_SCHEMA, the snapshot runs 24 jobs, 25 in some
+    runs. The events must be unchanged: 64 updates, 10 deletes."""
+    from rml_utils_processor_ts_spark.streaming.snapshots import SnapshotRunner
+
+    def doc(version, n=200):
+        kept = n - 10 if version == 2 else n
+        return "<resource>" + "".join(
+            f'<data id="{i:03d}" label="l{i}-{version if i % 3 == 0 else 0}"></data>'
+            for i in range(kept)
+        ) + "</resource>"
+
+    runner = SnapshotRunner(spark, state_root=str(tmp_path / "state"))
+    runner.add_mapping(RML_STATEFUL.format(source="dataset/data.xml"))
+    runner.push_snapshot("dataset/data.xml", doc(0))
+    runner.push_snapshot("dataset/data.xml", doc(1))
+    sc = spark.sparkContext
+    group = "test_steady_snapshot_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        (result,) = runner.push_snapshot("dataset/data.xml", doc(2))
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    events = {}
+    for r in result.triples.filter(result.triples.p == LIFECYCLE).collect():
+        kind = r["o"].rsplit("#", 1)[-1]
+        events[kind] = events.get(kind, 0) + 1
+    assert events == {"Update": 64, "Delete": 10}
+    assert jobs <= 25

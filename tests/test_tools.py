@@ -35,3 +35,17 @@ def test_named_tools_exist():
     assert named  # the scan itself found the documented tools
     missing = {n: where for n, where in named.items() if not os.path.exists(os.path.join(TOOLS, n))}
     assert not missing, f"tools named but absent: {missing}"
+
+
+def test_explain_dump_strips_session_counters():
+    """Dumps carry no session-wide ids, so an earlier query's plan change
+    cannot shift a later query's dump."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location("explain_dump", os.path.join(TOOLS, "explain_dump.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    a = "Exchange hashpartitioning(s#17, 8), ENSURE_REQUIREMENTS, [plan_id=227]\n+- LocalTableScan [n#83L]"
+    b = "Exchange hashpartitioning(s#4, 8), ENSURE_REQUIREMENTS, [plan_id=225]\n+- LocalTableScan [n#9L]"
+    assert mod.normalize_plan(a) == mod.normalize_plan(b)
+    assert mod.normalize_plan(a) == "Exchange hashpartitioning(s#N, 8), ENSURE_REQUIREMENTS, [plan_id=N]\n+- LocalTableScan [n#NL]"

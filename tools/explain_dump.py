@@ -5,16 +5,30 @@ Usage: python tools/explain_dump.py <tag> [suffix] [query ...]
 Writes plans/<tag>/<query>_<suffix>.txt (suffix defaults to "before").
 Driver-side only — no jobs run (explain compiles the plan without
 executing it), so this is safe to run alongside other work.
+
+Expression ids (``#123``) and exchange counters (``[plan_id=45]``) are
+numbered session-wide, so they are replaced with fixed tokens: a plan
+change in one query then leaves every later query's dump byte-identical.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+_SESSION_COUNTERS = ((re.compile(r"#\d+"), "#N"), (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"))
+
+
+def normalize_plan(plan: str) -> str:
+    """Replace session-wide ids with fixed tokens so dumps diff cleanly."""
+    for pattern, token in _SESSION_COUNTERS:
+        plan = pattern.sub(token, plan)
+    return plan
 
 
 def main() -> int:
@@ -46,8 +60,8 @@ def main() -> int:
             continue
         try:
             df = fn(spark, SF_DIR)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
+            plan = normalize_plan(
+                df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
             )
         except Exception as e:  # noqa: BLE001
             plan = f"EXPLAIN FAILED: {e}"

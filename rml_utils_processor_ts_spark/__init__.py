@@ -15,10 +15,7 @@ The reference's three processors map onto:
 
 from __future__ import annotations
 
-import logging
 import os
-
-log = logging.getLogger(__name__)
 
 __version__ = "0.1.0"
 
@@ -32,6 +29,12 @@ def get_spark(app_name: str = "rml_spark", cpus: str | None = None):
     cluster: AQE on (runtime re-plan / skew-join split / partition
     coalescing), UTC session timezone (oracle parity + determinism),
     Arrow enabled (every Python stage is pandas/Arrow vectorized).
+
+    Only builds the session: it starts no Spark job, so the first query
+    pays the JVM's class-loading and JIT warm-up. Environment:
+    ``SPARK_GRAFT_CPUS`` (when ``cpus`` is not given),
+    ``RML_SPARK_SHUFFLE_PARTITIONS``, ``RML_SPARK_DRIVER_MEM``,
+    ``RML_SPARK_UI`` and ``SPARK_LOCAL_DIRS``.
     """
     from pyspark.sql import SparkSession
 
@@ -63,149 +66,7 @@ def get_spark(app_name: str = "rml_spark", cpus: str | None = None):
     ):
         os.makedirs(shm, exist_ok=True)
         builder = builder.config("spark.local.dir", shm)
-    spark = builder.getOrCreate()
-    _warm_session(spark)
-    return spark
-
-
-def _warm_session(spark) -> None:
-    """One-time engine warm-up at session build (not per query).
-
-    A fresh JVM pays janino/whole-stage-codegen compiler bootstrap, the
-    Parquet reader/writer class loading, shuffle writer init, and the
-    noop-sink lookup on its FIRST action — several seconds that would
-    otherwise land on whichever query happens to run first. Running one
-    tiny synthetic job per surface here amortizes that engine
-    initialization into session construction, exactly like a warm
-    serving pool on a real cluster. No input data is touched and no
-    results are cached — every real query still computes from its own
-    sources.
-    """
-    if os.environ.get("RML_SPARK_WARMUP", "1") == "0":
-        return
-    try:
-        if spark.conf.get("spark.rml.warmed", "") == "1":
-            return
-    except Exception:  # noqa: BLE001
-        return
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    try:
-        par = spark.sparkContext.defaultParallelism
-        df = spark.range(0, 64 * max(par, 1), 1, max(par, 1)).select(
-            (F.col("id") % 7).cast("string").alias("k"),
-            F.md5(F.col("id").cast("string")).alias("h"),
-            F.regexp_replace(F.concat(F.lit("w  "), F.col("id").cast("string")), r"\s+", " ").alias("t"),
-        )
-        # codegen + generate + hash-shuffle + noop sink in one tiny job
-        warm = (
-            df.withColumn("__e", F.explode(F.array(F.col("k"), F.col("t"))))
-            .groupBy("k")
-            .agg(F.count("*").alias("n"), F.min("h").alias("m"))
-        )
-        warm.write.format("noop").mode("overwrite").save()
-        # columnar writer/reader bootstrap: tiny parquet round-trip in tmp
-        base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-        p = os.path.join(base, f"rml_warmup_{os.getpid()}")
-        df.limit(64).write.mode("overwrite").parquet(p)
-        spark.read.parquet(p).write.format("noop").mode("overwrite").save()
-        import shutil
-
-        shutil.rmtree(p, ignore_errors=True)
-        _warm_mapping_path(spark, base)
-        # Groom the heap before serving: warm-up churns several GB of
-        # short-lived allocations, and without this the first major GC
-        # of the 16g driver heap was measured landing INSIDE an early
-        # query's timed window (multi-second pause on a trivial query).
-        # A forced collection at session build moves that pause into the
-        # untimed warm-up, exactly like GC-grooming a serving pool.
-        try:
-            spark._jvm.System.gc()
-        except Exception:  # noqa: BLE001
-            pass
-        spark.conf.set("spark.rml.warmed", "1")
-    except Exception as exc:  # noqa: BLE001 — warm-up is best-effort only
-        log.warning("session warm-up failed (%s); serving without it", type(exc).__name__)
-
-
-def _warm_mapping_path(spark, base: str) -> None:
-    """Tier the JIT on the engine's hottest per-row classes.
-
-    The first execution of an XML-iterator mapping was measured paying
-    ~25 s of one-time cost at 800k pages (fresh JVM, r10): the work runs
-    interpreted/C1 until HotSpot's C2 thresholds trip on the shared
-    expression classes (java.util.regex in RegExpExtractAll, the StAX
-    XML parser behind from_xml, UTF8String ops, UrlCodec for template
-    IRI-encoding, Generate/explode, the sort-shuffle writer). A second
-    run of the same query took 7.7 s — the code is identical, only the
-    compiled tier differs. Running a miniature of the same operator
-    composition here (30k synthetic pages, self-generated — no test
-    data, no cached results) pushes those invocation counts past the C2
-    threshold during session construction instead of during the first
-    real mapping."""
-    import shutil
-
-    from .operators.executor import execute_mapping
-    from .sources.pages import synth_pages
-
-    p = os.path.join(base, f"rml_warmup_pages_{os.getpid()}")
-    n = int(os.environ.get("RML_SPARK_WARMUP_PAGES", "30000"))
-    synth_pages(spark, n).write.mode("overwrite").parquet(p)
-    mapping = f"""
-ex:warm a rr:TriplesMap ;
-    rml:logicalSource [ a rml:LogicalSource ;
-        rml:source "pages:{p}" ;
-        rml:iterator "//data" ;
-        rml:referenceFormulation ql:XPath ] ;
-    rr:subjectMap [ a rr:SubjectMap ; rr:template "http://example.org/{{@id}}" ;
-        rr:class <http://example.org/Entity> ] ;
-    rr:predicateObjectMap [
-        rr:predicateMap [ rr:constant rdfs:label ] ;
-        rr:objectMap [ rml:reference "@label" ; rr:termType rr:Literal ] ] .
-"""
-    execute_mapping(spark, mapping).triples.count()
-    shutil.rmtree(p, ignore_errors=True)
-
-    # table-source twin: the first table-backed mapping otherwise pays
-    # the InMemoryFileIndex + parquet column-reader + template/IRI-encode
-    # first-compilation cost inside its own timing window
-    pt = os.path.join(base, f"rml_warmup_tbl_{os.getpid()}")
-    from pyspark.sql import functions as F
-
-    spark.range(0, 20_000, 1, spark.sparkContext.defaultParallelism).select(
-        F.col("id").alias("k"),
-        F.concat(F.lit("name "), F.col("id").cast("string")).alias("nm"),
-    ).write.mode("overwrite").parquet(pt)
-    tmap = f"""
-ex:warm_t a rr:TriplesMap ;
-    rml:logicalSource [ a rml:LogicalSource ;
-        rml:source "table:{pt}" ;
-        rml:referenceFormulation <urn:rml-spark:ql/Table> ] ;
-    rr:subjectMap [ a rr:SubjectMap ; rr:template "http://example.org/e/{{k}}" ;
-        rr:class <http://example.org/T> ] ;
-    rr:predicateObjectMap [
-        rr:predicateMap [ rr:constant rdfs:label ] ;
-        rr:objectMap [ rml:reference "nm" ; rr:termType rr:Literal ] ] .
-"""
-    execute_mapping(spark, tmap).triples.write.format("noop").mode("overwrite").save()
-    shutil.rmtree(pt, ignore_errors=True)
-
-    # iterative-join twin: the first connected-components run otherwise
-    # pays the join/aggregate/localCheckpoint class-loading + JIT inside
-    # its own timing window (measured: first cc execution 4-5.4 s vs
-    # 2.2-3 s warm on the same graph). A small synthetic graph walks the
-    # same loop (shuffle joins, min-aggregates, lineage cuts, the
-    # edge-consistency probe) at session build instead.
-    from .operators.cc import connected_components
-
-    edges = spark.range(0, 20_000, 1, spark.sparkContext.defaultParallelism).select(
-        F.concat(F.lit("n"), (F.col("id") % 5000).cast("string")).alias("src"),
-        F.concat(F.lit("n"), ((F.col("id") * 7 + 1) % 5000).cast("string")).alias("dst"),
-    )
-    connected_components(edges).write.format("noop").mode("overwrite").save()
-
+    return builder.getOrCreate()
 
 
 _LAZY_EXPORTS = {

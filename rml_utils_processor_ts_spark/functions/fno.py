@@ -50,10 +50,6 @@ def sorted_params(fn: FunctionCall):
     return sorted(fn.params.items(), key=lambda kv: param_sort_key(kv[0]))
 
 
-def _positional_params(fn: FunctionCall, prefix_hints: tuple[str, ...]) -> list[TermMap]:
-    return [tm for key, tm in sorted_params(fn) if any(h in key for h in prefix_hints)]
-
-
 def compile_function(fn: FunctionCall, compile_term: Callable[[TermMap, str], Column]) -> Column:
     """Build a Column for an FnO call. ``compile_term`` compiles a
     parameter TermMap in a given position ('value' -> plain string)."""

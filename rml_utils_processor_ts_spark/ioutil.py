@@ -34,9 +34,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 # inputs larger than this are "real" scans — never add a spreading
-# shuffle for them (env-tunable; 256 MB default keeps the worst-case
-# round-robin pass well under a second on any modern node)
-_SPREAD_MAX_BYTES = int(os.environ.get("RML_SPREAD_SCAN_MAX_MB", "256")) * 1024 * 1024
+# shuffle for them (256 MB keeps the worst-case round-robin pass well
+# under a second on any modern node)
+_SPREAD_MAX_BYTES = 256 * 1024 * 1024
 
 
 def _local_path(uri: str) -> str:
@@ -54,15 +54,13 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
       * the scan has fewer input files than the session's default
         parallelism (a proxy for "fewer splits than cores": row-group
         granularity caps effective splits at ~1/file for small files);
-      * the total input is under RML_SPREAD_SCAN_MAX_MB (default 256),
-        so the repartition pass costs milliseconds.
+      * the total input is under ``_SPREAD_MAX_BYTES`` (256 MB), so the
+        repartition pass costs milliseconds.
 
     The explicit partition count is preserved by AQE (only
     ENSURE_REQUIREMENTS shuffles are coalesced), so the downstream
     map-side work genuinely runs wide.
     """
-    if os.environ.get("RML_SPREAD_SCAN", "1") == "0":
-        return df
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     if par <= 1:

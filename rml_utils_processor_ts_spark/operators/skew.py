@@ -13,15 +13,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salt_column(key, n_salt: int):
-    """Deterministic salt derived from a row-level expression via a
-    secondary hash — never a random number (reproducibility requirement).
-    The expression must vary WITHIN a hot group: a salt computed from the
-    group key alone assigns every row of that key the same salt and the
-    mitigation degenerates to a plain groupBy/join."""
-    return F.pmod(F.xxhash64(key, F.lit("salt")), F.lit(n_salt)).cast("int")
-
-
 def row_spread_salt(n_salt: int):
     """Salt that spreads EVERY row — including byte-identical duplicate
     rows, the common shape of a hot key in web corpora — by HASHING the

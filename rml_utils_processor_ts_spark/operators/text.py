@@ -29,71 +29,10 @@ def tokens(col: Column) -> Column:
     return F.split(F.regexp_replace(F.lower(col), r"\s+", " "), " ")
 
 
-def whitespace_token_count(col: Column) -> Column:
-    return F.size(tokens(col))
-
-
 def bpe_token_count(col: Column) -> Column:
     """BPE-ish subword proxy: runs of letters, runs of digits, single
     punctuation — a stable upper bound on BPE token count."""
     return F.size(F.regexp_extract_all(F.regexp_replace(F.lower(col), r"\s+", " "), F.lit(BPE_TOKEN_REGEX), F.lit(0)))
-
-
-def stopword_ratio(col: Column) -> Column:
-    toks = tokens(col)
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
-    return F.round(n_stop.cast("double") / F.size(toks), 6)
-
-
-def mean_word_length(col: Column) -> Column:
-    toks = tokens(col)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.round(total.cast("double") / F.size(toks), 6)
-
-
-def quality_score(col: Column) -> Column:
-    """Composite quality heuristic in [0,1]: length band + stopword
-    presence + word-length sanity. Deterministic, oracle-reproducible."""
-    n = whitespace_token_count(col)
-    len_ok = F.when((n >= 10) & (n <= 100000), F.lit(0.4)).otherwise(F.lit(0.0))
-    stop_ok = F.when(stopword_ratio(col) >= 0.01, F.lit(0.3)).otherwise(F.lit(0.0))
-    mwl = mean_word_length(col)
-    mwl_ok = F.when((mwl >= 2.0) & (mwl <= 12.0), F.lit(0.3)).otherwise(F.lit(0.0))
-    return F.round(len_ok + stop_ok + mwl_ok, 6)
-
-
-def lang_id(col: Column) -> Column:
-    """Marker-vote language ID: score = count of marker words present;
-    highest score wins, ties broken by language code order."""
-    toks = tokens(col)
-    scores = []
-    for lang in sorted(LANG_MARKERS):
-        marker_arr = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
-        scores.append(
-            (lang, F.size(F.filter(toks, lambda t: F.array_contains(marker_arr, t))))
-        )
-    # argmax via chained comparisons (deterministic tie-break: first max)
-    best_lang = F.lit(sorted(LANG_MARKERS)[0])
-    best_score = scores[0][1]
-    for lang, sc in scores[1:]:
-        better = sc > best_score
-        best_lang = F.when(better, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(better, sc).otherwise(best_score)
-    return F.when(best_score > 0, best_lang).otherwise(F.lit("und"))
-
-
-def doc_fingerprint(col: Column, k: int = 5) -> Column:
-    """Rolling fingerprint: min over word k-gram windows of md5(gram) —
-    a 1-hash MinHash; robust to local edits, oracle-reproducible."""
-    toks = tokens(col)
-    n = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(n - k, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-    )
-    grams = F.when(n >= k, grams).otherwise(F.array(F.concat_ws(" ", toks)))
-    return F.array_min(F.transform(grams, lambda g: F.md5(g)))
 
 
 def text_profile(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

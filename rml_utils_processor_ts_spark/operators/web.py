@@ -112,20 +112,6 @@ def normalize_url(url: Column) -> Column:
     return F.when((scheme == "") | (host == ""), url).otherwise(built)
 
 
-def url_profile(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Per-row URL breakdown + canonical form."""
-    u = F.col(url_col)
-    host = url_host(u)
-    return df.withColumns(
-        {
-            "norm_url": normalize_url(u),
-            "host": host,
-            "registered_domain": registered_domain(host),
-            "scheme": url_scheme(u),
-        }
-    )
-
-
 def url_dedup_groups(df: DataFrame, url_col: str = "url", id_col: str = "doc_id") -> DataFrame:
     """Exact URL dedup on the CANONICAL form: one row per normalized
     URL with the minimum id as keeper and the duplicate count.

@@ -107,11 +107,6 @@ def _parse_term_map(g: Graph, node: Term, resolve_base: bool = True) -> TermMap:
     return tm
 
 
-def _parse_graph_map(g: Graph, node: Term) -> TermMap | None:
-    """First graph map on ``node`` (single-graph callers)."""
-    return _parse_graph_maps(g, node)[0]
-
-
 def _parse_graph_maps(g: Graph, node: Term) -> list[TermMap | None]:
     """ALL rr:graphMap / rr:graph values on ``node`` (R2RML §9 allows
     several; the generated triple lands in EVERY named graph). ``None``

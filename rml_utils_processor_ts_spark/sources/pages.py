@@ -92,10 +92,6 @@ def extract_text(pages: DataFrame) -> DataFrame:
     return pages.withColumn("extracted_text", extracted)
 
 
-def write_pages(spark: SparkSession, path: str, n_pages: int, **kw) -> None:
-    synth_pages(spark, n_pages, **kw).write.mode("overwrite").parquet(path)
-
-
 # common character entities decoded by html_to_text; amp LAST so
 # "&amp;lt;" decodes to "&lt;" (literal), not "<" (double-decode)
 _HTML_ENTITIES = [
@@ -137,11 +133,3 @@ def html_to_text(html_col):
     t = F.regexp_replace(t, r" ?\n ?", "\n")
     t = F.regexp_replace(t, r"\n{2,}", "\n")
     return F.trim(t)
-
-
-def extract_visible_text(pages: DataFrame, html_col: str = "html") -> DataFrame:
-    """``html:binary`` -> UTF-8 decode -> :func:`html_to_text`, the
-    generic-page twin of ``extract_text``."""
-    return pages.withColumn(
-        "extracted_text", html_to_text(F.decode(F.col(html_col), "UTF-8"))
-    )

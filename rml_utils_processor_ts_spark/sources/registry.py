@@ -29,7 +29,9 @@ Iteration strategy: common shapes run JVM-side with whole-stage codegen
 per-row self-nesting detection; JSON array iterators via ``from_json``
 + ``explode``); everything else runs in a vectorized Arrow-batched
 ``pandas_udf`` returning ``array<struct<...>>`` — batched per Arrow
-chunk, never per-row Python UDFs.
+chunk, never per-row Python UDFs. The choice follows the iterator
+shape, the references and (for XML) each document's nesting and
+``xmlns``; no setting forces either path.
 """
 
 from __future__ import annotations
@@ -343,11 +345,10 @@ def _xml_fast_path_plan(iterator: str | None, refs: list[str]):
 
     Known limitation vs the slow path: the fragment regex closes at the
     first ``</tag>``, so documents nesting the iterator tag INSIDE itself
-    mis-split. The iterate stage AUTO-DETECTS such documents per row (an
-    opening-tag count exceeding the fragment count means a fragment
-    swallowed a nested opener) and routes only those documents through
-    the Python tree-walking path; RML_XML_FAST_PATH=0 still forces the
-    slow path globally."""
+    mis-split. The iterate stage AUTO-DETECTS such documents per row (a
+    fragment containing a second ``<tag`` opener swallowed a nested one)
+    and routes only those documents through the Python tree-walking
+    path."""
     import re
 
     if not iterator:
@@ -496,7 +497,7 @@ def _iterate_docs_df(df: DataFrame, payload_col: str, ls: LogicalSource, refs: l
         return _python_iterate_records(
             df, payload_col, ls.kind, ls.iterator, refs, passthrough, _json.loads(ns_json)
         )
-    if ls.kind == "xpath" and os.environ.get("RML_XML_FAST_PATH", "1") != "0":
+    if ls.kind == "xpath":
         plan = _xml_fast_path_plan(ls.iterator or "", refs)
         if plan is not None:
             tag, rec_struct, extract = plan
@@ -526,7 +527,7 @@ def _iterate_docs_df(df: DataFrame, payload_col: str, ls: LogicalSource, refs: l
                 with_frags.filter(nested).drop("__frags"), payload_col, "xpath", ls.iterator, refs, passthrough
             )
             return fast.unionByName(slow)
-    if ls.kind == "jsonpath" and os.environ.get("RML_JSON_FAST_PATH", "1") != "0":
+    if ls.kind == "jsonpath":
         schema = _json_fast_path_plan(ls.iterator, refs)
         if schema is not None:
             recs = df.withColumn("__recs", F.from_json(F.col(payload_col), schema))

@@ -23,13 +23,12 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-from ..operators.cc import _materialize
 from ..operators.cdc import StateStore
-from ..operators.executor import ExecutionResult, PlanExecutor
+from ..operators.executor import ExecutionResult
 from ..plans.model import MappingPlan
 from ..plans.rml_parser import parse_mapping
 from ..sources.registry import register_memory_source, unregister_memory_source
+from .snapshots import _execute_and_commit
 
 
 @dataclass
@@ -110,26 +109,16 @@ class MicroBatchMappingRunner:
             bound = deepcopy(self._plan)
             for tm in bound.triples_maps:
                 tm.logical_source.source = f"memory:{self._key}"
-            ex = PlanExecutor(
-                self.spark,
-                state_store=self._store,
-                publisher_ref=self.publisher_ref,
-                publisher_regex=self.publisher_regex,
+            result = _execute_and_commit(
+                self.spark, bound, self._store, self.publisher_ref, self.publisher_regex
             )
-            result = ex.execute(bound)
-            # materialize before the state commit (same invariant as the
-            # snapshot runner: a batch's output must not observe its own
-            # state update)
-            result.triples = _materialize(result.triples)
         finally:
-            # execute() iterated the batch frame once into a checkpoint
-            # that the triples and the state updates read, so nothing
-            # references the batch frame any more; keeping it registered
-            # would pin every runner's last batch for the life of the
-            # process
+            # the step read the batch frame into checkpoints (the
+            # stateful sources and the triples), so nothing references
+            # it any more; keeping it registered would pin every
+            # runner's last batch for the life of the process
             unregister_memory_source(self._key)
         if self._store is not None:
-            self._store.commit_all(result.state_updates)
             self._write_marker(batch_id)
         self.results.append(result)
         return result

@@ -107,30 +107,44 @@ class SnapshotRunner:
                 ],
                 source_bindings=bindings,
             )
-            ex = PlanExecutor(
-                self.spark,
-                state_store=store,
-                publisher_ref=self.publisher_ref,
-                publisher_regex=self.publisher_regex,
+            result = _execute_and_commit(
+                self.spark, bound, store, self.publisher_ref, self.publisher_regex
             )
-            result = ex.execute(bound)
-            # Materialize before the state commit: computed lazily after
-            # commit_all, the triples could read the state this run just
-            # wrote (a table-backed backend resolves its current snapshot
-            # when a query runs). Neither they nor the state updates
-            # re-iterate a stateful source: both read the checkpoint
-            # execute() made of it. Executor-side checkpoint (never a
-            # driver collect — a table-backed source would pull the whole
-            # triple set through the driver).
-            result.triples = _materialize(result.triples)
-            if store is not None:
-                store.commit_all(result.state_updates)
             merged = result if merged is None else ExecutionResult(
                 triples=merged.triples.unionByName(result.triples)
             )
         assert merged is not None, "no mappings registered"
         self.results.append(merged)
         return merged
+
+
+def _execute_and_commit(
+    spark: SparkSession,
+    plan: MappingPlan,
+    store: StateStore | None,
+    publisher_ref: str | None,
+    publisher_regex: str | None,
+) -> ExecutionResult:
+    """One snapshot step, shared by both runners: execute the plan,
+    materialize its triples, then commit its state updates."""
+    result = PlanExecutor(
+        spark,
+        state_store=store,
+        publisher_ref=publisher_ref,
+        publisher_regex=publisher_regex,
+    ).execute(plan)
+    # Materialize before the state commit: computed lazily after
+    # commit_all, the triples could read the state this step just wrote
+    # (a table-backed backend resolves its current snapshot when a query
+    # runs), so a step's output would observe its own state update.
+    # Neither the triples nor the state updates re-iterate a stateful
+    # source: both read the checkpoint execute() made of it.
+    # Executor-side checkpoint (never a driver collect — a table-backed
+    # source would pull the whole triple set through the driver).
+    result.triples = _materialize(result.triples)
+    if store is not None:
+        store.commit_all(result.state_updates)
+    return result
 
 
 def _rebind_tm(tm, bindings: dict[str, str]):

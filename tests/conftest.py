@@ -13,9 +13,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("RML_SPARK_SHUFFLE_PARTITIONS", "8")
-    # tests exercise correctness, not steady-state throughput: skip the
-    # JIT warm-up jobs get_spark runs for serving/bench sessions
-    os.environ.setdefault("RML_SPARK_WARMUP", "0")
     s = get_spark("rml_spark_tests", cpus="8")
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -9,8 +9,6 @@
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -43,12 +41,6 @@ def test_spread_noop_when_parallel_enough(spark, tmp_path):
     df = spark.read.parquet(p)
     out = spread_small_scan(df)
     assert out is df  # untouched: already >= 25% as parallel as the session
-
-
-def test_spread_noop_when_disabled(spark, tiny_parquet, monkeypatch):
-    monkeypatch.setenv("RML_SPREAD_SCAN", "0")
-    df = spark.read.parquet(tiny_parquet)
-    assert spread_small_scan(df) is df
 
 
 def test_spread_noop_on_non_file_plans(spark):

@@ -1,10 +1,10 @@
-"""Session build (`get_spark`): scratch-dir choice and warm-up failure
-reporting."""
+"""Session build (`get_spark`): scratch-dir choice, and no jobs run
+while the session is built."""
 
-import logging
 import os
 
-import rml_utils_processor_ts_spark as pkg
+from test_tools import PACKAGE_ENV_KNOBS
+
 from rml_utils_processor_ts_spark import get_spark
 
 
@@ -24,22 +24,26 @@ def test_spark_local_dirs_env_skips_shm_dir(spark, monkeypatch, tmp_path):
     assert not any("spark-local" in p for p in made), made
 
 
-def test_warmup_failure_logs_exception_class(spark, monkeypatch, caplog):
-    """A failing warm-up step is reported with its exception class, and
-    the session is still served."""
-
-    def boom(spark, base):
-        raise RuntimeError("warm-up step crashed")
-
-    monkeypatch.setattr(pkg, "_warm_mapping_path", boom)
-    monkeypatch.setenv("RML_SPARK_WARMUP", "1")
-    warmed = spark.conf.get("spark.rml.warmed", "")
-    spark.conf.unset("spark.rml.warmed")
+def test_get_spark_starts_no_jobs(spark, monkeypatch):
+    """get_spark() only builds the session: with every environment
+    variable outside the package's knobs cleared and every ``spark.rml.*``
+    session flag unset, fetching the session starts no Spark job."""
+    for name in list(os.environ):
+        if name.startswith("RML_") and name not in PACKAGE_ENV_KNOBS:
+            monkeypatch.delenv(name)
+    for key in spark.conf.getAll:
+        if key.startswith("spark.rml."):
+            spark.conf.unset(key)
+    sc = spark.sparkContext
+    group = "get_spark_starts_no_jobs"
+    bus = sc._jsc.sc().listenerBus()
+    sc.setJobGroup(group, group)
     try:
-        with caplog.at_level(logging.WARNING, logger=pkg.__name__):
-            assert get_spark("rml_spark_tests") is spark
+        assert get_spark("rml_spark_tests") is spark
+        bus.waitUntilEmpty(30_000)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        spark.range(1).count()
+        bus.waitUntilEmpty(30_000)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) > 0
     finally:
-        if warmed:
-            spark.conf.set("spark.rml.warmed", warmed)
-    assert "RuntimeError" in caplog.text and "warm-up failed" in caplog.text
-    assert spark.conf.get("spark.rml.warmed", "") == warmed
+        sc.setLocalProperty("spark.jobGroup.id", None)

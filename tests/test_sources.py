@@ -202,15 +202,18 @@ ex:m a rr:TriplesMap ;
         execute_mapping(spark, mapping)
 
 
-def test_json_fast_path_matches_tree_walker(spark, monkeypatch):
+def test_json_fast_path_matches_tree_walker(spark):
     """The JVM from_json fast path (array iterator + top-level keys) must
     render every value type exactly like the Python tree-walking path:
     ints, normalized floats, booleans, nulls, missing keys, nested
     objects (document key order) and arrays."""
-    import os
-
+    from rml_utils_processor_ts_spark.ioutil import local_frame
     from rml_utils_processor_ts_spark.plans.model import LogicalSource
-    from rml_utils_processor_ts_spark.sources.registry import records_df, ref_column_name
+    from rml_utils_processor_ts_spark.sources.registry import (
+        _python_iterate_records,
+        records_df,
+        ref_column_name,
+    )
 
     doc = (
         '[{"i": 7, "f": 1.50, "b": true, "s": "café", "n": null,'
@@ -220,29 +223,35 @@ def test_json_fast_path_matches_tree_walker(spark, monkeypatch):
     refs = ["i", "f", "b", "s", "n", "o", "m"]
     ls = LogicalSource(source="inline:" + doc, kind="jsonpath", iterator="$.[*]")
 
-    def rows(env: str):
-        monkeypatch.setenv("RML_JSON_FAST_PATH", env)
-        df = records_df(spark, ls, refs)
+    def rows(df):
         return sorted(
             tuple(r[ref_column_name(x)] for x in refs) for r in df.collect()
         )
 
-    fast, slow = rows("1"), rows("0")
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    fast_df = records_df(spark, ls, refs)
+    walker_df = _python_iterate_records(
+        local_frame(spark, [(doc,)], "doc string"), "doc", "jsonpath", ls.iterator, refs, []
+    )
+    assert "ArrowEvalPython" not in plan(fast_df)
+    assert "ArrowEvalPython" in plan(walker_df)
+    fast, slow = rows(fast_df), rows(walker_df)
     assert fast == slow
     assert ("7", "1.5", "true", "café", None, '{"z":1,"a":2}', "[1,2]") in fast
     # non-fast shapes (dotted refs) still route to the tree walker
     nested_ls = LogicalSource(
         source='inline:[{"a": {"b": "v"}}]', kind="jsonpath", iterator="$.[*]"
     )
-    monkeypatch.setenv("RML_JSON_FAST_PATH", "1")
     got = records_df(spark, nested_ls, ["a.b"]).collect()
     assert [r[ref_column_name("a.b")] for r in got] == ["v"]
 
 
 def test_xml_self_nested_iterator_autodetected(spark):
     """Documents nesting the iterator tag inside itself are auto-routed
-    to the tree-walking path (no RML_XML_FAST_PATH env var needed);
-    flat documents in the same frame still take the JVM fast path."""
+    to the tree-walking path; flat documents in the same frame still
+    take the JVM fast path."""
     mapping = """
 ex:m a rr:TriplesMap ;
     rml:logicalSource [ a rml:LogicalSource ; rml:source "d.xml" ;

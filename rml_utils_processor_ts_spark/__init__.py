@@ -53,6 +53,10 @@ def get_spark(app_name: str = "rml_spark", cpus: str | None = None):
         # exposes the REST API for shuffle/spill evidence capture
         .config("spark.ui.enabled", os.environ.get("RML_SPARK_UI", "false"))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # generated classes are cached by their code; a snapshot step
+        # plans ~50 of them, so the default 100 entries evict them
+        # before the next step and every step recompiled its plans
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     # local mode: shuffle files on tmpfs kill disk-latency variance (a
     # real cluster has NVMe-local shuffle dirs; this is the sandbox twin).

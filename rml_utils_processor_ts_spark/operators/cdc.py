@@ -8,48 +8,54 @@ per-publisher re-keying at /root/reference/src/rml/rml.ts:302-370).
 Spark-native semantics, per snapshot run against a persistent entity
 registry keyed by (iri, publisher):
 
-  * explicitCreate  — emit subjects unseen in state (left-anti vs state),
-    then register them. First snapshot of a publisher => all Create
-    (observed end-to-end, /root/reference/test/rml.test.ts:954-974).
+  * explicitCreate  — emit subjects unseen in state, then register them
+    (the stored fingerprint wins). First snapshot of a publisher => all
+    Create (observed end-to-end in the reference's test/rml.test.ts:954-974).
   * implicitUpdate  — emit subjects whose watched-properties fingerprint
-    changed (inner join, hash mismatch), then update the fingerprint.
+    changed, then store the current fingerprint; subjects unseen in the
+    snapshot keep their row.
   * implicitDelete  — emit subjects present in state but absent from the
-    current snapshot (state LEFT ANTI current), then unregister.
+    current snapshot, within the publishers the snapshot carries, then
+    unregister them.
 
 The publisher id is part of the composite state key (a groupBy-key
 column, not a file-name rewrite): the Spark fix for the reference's
 false-delete hazard documented at rml.ts:302-320.
 
-Each event joins the current entities against its own state table:
-left-anti for create, inner for update, semi-then-anti for delete (all
-AQE-managed, on (iri, publisher)). The executor checkpoints each
-stateful source once per execution, so the emitted triples and the
-three new-state frames read one iteration of the source.
-:func:`cdc_diff` is the single full-outer-join form of the same
-classification; it backs the gated ``cdc_diff`` query, not the
+:func:`execute_stateful` classifies every stateful TriplesMap of a plan
+at once: the union of their current entities full-outer-joins the union
+of their state tables on (TriplesMap, iri, publisher), one window scopes
+delete to the snapshot's publishers, and the emit flag and new
+fingerprint are columns of one checkpoint. The emitted triples and every
+new state table read that checkpoint; the executor has already
+checkpointed each stateful source, so the source is iterated once.
+:func:`cdc_diff` is the same classification for one table, without the
+publisher scope; it backs the gated ``cdc_diff`` query, not the
 executor.
 
-State is a versioned parquet table per state id (Iceberg-style snapshot
-dirs + a latest pointer) — resumable, atomic repoint, time-travelable.
-At cluster scale the same layout is an Iceberg table written with
-MERGE INTO.
+:class:`StateStore` keeps every state table of a store in one versioned
+parquet directory per commit, behind one manifest: a step's tables move
+together or not at all. At cluster scale the same layout is one Iceberg
+table partitioned by state id.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import re
 from dataclasses import replace
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..ioutil import local_frame
 from ..plans import voc
 from ..plans.model import FunctionCall, TermMap, TriplesMap
 from ..state import StateBackend
-from .terms import compile_term_map
+from .cc import _materialize
+from .terms import compile_term_map, stateful_subject_spec
 
 STATE_SCHEMA = "iri string, publisher string, watched_hash string"
 
@@ -112,58 +118,90 @@ def watched_references(tm: TermMap) -> list[str]:
     return refs
 
 
+def _union(frames: list[DataFrame]) -> DataFrame:
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return out
+
+
+def _md5(state_id: str) -> str:
+    return hashlib.md5(state_id.encode()).hexdigest()
+
+
 class StateStore(StateBackend):
-    """Versioned parquet state tables under ``root/<md5(state_id)>/v_N``.
+    """Versioned parquet state under ``root``: every commit writes one
+    ``v_N`` directory holding all the tables of the step, partitioned by
+    ``state=md5(state_id)``, then replaces the store-wide ``LATEST``
+    manifest ``{"version": N, "tables": {state_id: partition path}}``.
 
-    ``read`` returns the latest committed snapshot (empty frame if none);
-    ``commit`` writes v_{N+1} and atomically repoints ``LATEST``. This is
-    the sandbox stand-in for an Iceberg state table: same snapshot
-    semantics, same resume story (the LATEST pointer ≙ current snapshot
-    id; a killed run never half-updates state).
-
-    One implementation of the :class:`rml_utils_processor_ts_spark.state.
-    StateBackend` seam — the executor/streaming layers type against the
-    interface, so ``state.IcebergStateStore`` (which documents the
-    per-transition MERGE INTO mapping) drops in when the runtime jars
-    exist.
+    ``read`` resolves a state id through the manifest (empty frame if it
+    was never committed or its table was empty). ``commit_all`` is
+    atomic across its tables: the manifest moves with one ``os.replace``
+    after the parquet write, so a killed commit leaves every table at its
+    previous version, and replaying the step overwrites the orphaned
+    ``v_N``. Tables absent from a step keep their partition path. This
+    is the local-filesystem stand-in for an Iceberg state table: one
+    version directory ≙ one Iceberg snapshot, the manifest ≙ the
+    current snapshot id.
     """
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
+        for name in sorted(os.listdir(root)):
+            old = os.path.join(root, name)
+            if os.path.isfile(os.path.join(old, "LATEST")):
+                raise ValueError(
+                    f"state root {root!r} holds a per-table state directory ({old}) "
+                    "from the older one-pointer-per-table layout, which this store "
+                    "does not read; the state must be rebuilt from an empty root"
+                )
 
-    def _dir(self, state_id: str) -> str:
-        return os.path.join(self.root, hashlib.md5(state_id.encode()).hexdigest())
+    def _manifest(self) -> dict:
+        path = os.path.join(self.root, "LATEST")
+        if not os.path.exists(path):
+            return {"version": 0, "tables": {}}
+        with open(path) as fh:
+            return json.load(fh)
 
-    def _latest_version(self, state_id: str) -> int:
-        pointer = os.path.join(self._dir(state_id), "LATEST")
-        if not os.path.exists(pointer):
-            return 0
-        with open(pointer) as fh:
-            return int(fh.read().strip())
+    def _write_manifest(self, manifest: dict) -> None:
+        tmp = os.path.join(self.root, "LATEST.tmp")
+        with open(tmp, "w") as fh:
+            json.dump(manifest, fh, sort_keys=True)
+        os.replace(tmp, os.path.join(self.root, "LATEST"))
 
     def read(self, state_id: str) -> DataFrame:
-        v = self._latest_version(state_id)
-        if v == 0:
+        part = self._manifest()["tables"].get(state_id)
+        if part is None:
             return local_frame(self.spark, [], STATE_SCHEMA)
         # the schema is always STATE_SCHEMA: passing it skips the
         # footer-reading job schema inference would start
-        return self.spark.read.schema(STATE_SCHEMA).parquet(os.path.join(self._dir(state_id), f"v_{v}"))
+        return self.spark.read.schema(STATE_SCHEMA).parquet(os.path.join(self.root, part))
 
     def commit(self, state_id: str, df: DataFrame) -> int:
-        v = self._latest_version(state_id) + 1
-        d = self._dir(state_id)
-        os.makedirs(d, exist_ok=True)
-        df.write.mode("overwrite").parquet(os.path.join(d, f"v_{v}"))
-        tmp = os.path.join(d, "LATEST.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(str(v))
-        os.replace(tmp, os.path.join(d, "LATEST"))
-        return v
+        return self.commit_all({state_id: df})[state_id]
 
     def commit_all(self, updates: dict[str, DataFrame]) -> dict[str, int]:
-        return {sid: self.commit(sid, df) for sid, df in updates.items()}
+        if not updates:
+            return {}
+        manifest = self._manifest()
+        v = manifest["version"] + 1
+        out = os.path.join(self.root, f"v_{v}")
+        frames = [
+            df.select("iri", "publisher", "watched_hash", F.lit(_md5(sid)).alias("state"))
+            for sid, df in updates.items()
+        ]
+        _union(frames).write.mode("overwrite").partitionBy("state").parquet(out)
+        # an empty table writes no partition; it reads as an empty frame
+        written = set(os.listdir(out))
+        tables = dict(manifest["tables"])
+        for sid in updates:
+            part = f"state={_md5(sid)}"
+            tables[sid] = f"v_{v}/{part}" if part in written else None
+        self._write_manifest({"version": v, "tables": tables})
+        return {sid: v for sid in updates}
 
 
 def cdc_diff(current: DataFrame, state: DataFrame, key: list[str] | None = None) -> DataFrame:
@@ -188,125 +226,146 @@ def cdc_diff(current: DataFrame, state: DataFrame, key: list[str] | None = None)
     return joined.select(*key, lifecycle.alias("lifecycle")).filter(F.col("lifecycle") != "unchanged")
 
 
-def execute_stateful_tm(
+_CREATE, _UPDATE, _DELETE = 0, 1, 2
+_EVENT_CODES = {
+    voc.IDLAB_EXPLICIT_CREATE: _CREATE,
+    voc.IDLAB_IMPLICIT_UPDATE: _UPDATE,
+    voc.IDLAB_IMPLICIT_DELETE: _DELETE,
+}
+_KEY = ["tm", "iri", "publisher"]
+
+
+def execute_stateful(
     executor,
-    tm: TriplesMap,
-    fn: FunctionCall,
-    records: DataFrame,
-    resolve,
+    stateful: list[tuple[int, TriplesMap, DataFrame, object]],
     by_name: dict[str, TriplesMap],
 ):
-    """Run one CDC TriplesMap; returns (frames, state_updates). The
-    emitted entities project through the executor's one projector, with
-    the event frame's ``__s`` as the subject."""
+    """Run every CDC TriplesMap of one plan in one classification;
+    returns (frames, state_updates).
+
+    ``stateful`` holds ``(position in the plan, TriplesMap, records,
+    reference resolver)``. The current entities of all of them are
+    full-outer-joined with the union of their state tables on
+    ``(tm, iri, publisher)``, the emit decision and the new fingerprint
+    become columns, and the result is checkpointed once.
+    Each emit frame and each new state table reads that checkpoint."""
     if executor.state_store is None:
-        raise ValueError(f"TriplesMap {tm.name} uses stateful FnO functions but no state_store configured")
-    event = fn.function_iri
-    iri_tm = fn.params.get(voc.IDLAB_IRI)
-    if iri_tm is None:
-        raise ValueError(f"{event} without idlab-fn:iri parameter")
-    state_tm = fn.params.get(voc.IDLAB_STATE)
-    if state_tm is None or state_tm.constant is None:
-        raise ValueError(f"{event} without constant idlab-fn:state parameter")
-    state_id = state_tm.constant
+        names = ", ".join(tm.name for _, tm, _, _ in stateful)
+        raise ValueError(f"TriplesMaps {names} use stateful FnO functions but no state_store configured")
+    owners: dict[str, str] = {}
+    specs = []
+    current = []
+    states = []
+    for pos, tm, records, resolve in stateful:
+        fn = stateful_subject_spec(tm.subject_map.term_map)
+        event = fn.function_iri
+        if event not in _EVENT_CODES:
+            raise ValueError(f"unknown stateful function {event}")
+        iri_tm = fn.params.get(voc.IDLAB_IRI)
+        if iri_tm is None:
+            raise ValueError(f"{event} without idlab-fn:iri parameter")
+        state_tm = fn.params.get(voc.IDLAB_STATE)
+        if state_tm is None or state_tm.constant is None:
+            raise ValueError(f"{event} without constant idlab-fn:state parameter")
+        state_id = state_tm.constant
+        if state_id in owners:
+            raise ValueError(
+                f"TriplesMaps {owners[state_id]} and {tm.name} share idlab-fn:state "
+                f"{state_id!r}; each stateful TriplesMap needs its own state table"
+            )
+        owners[state_id] = tm.name
+        watched_tm = fn.params.get(voc.IDLAB_WATCHED_PROPERTY)
+        watched = compile_watched_term(watched_tm, resolve) if watched_tm is not None else F.lit("")
+        if executor.publisher_ref is not None:
+            # record-reference form: the id is reachable through the iterator
+            publisher = resolve(executor.publisher_ref)
+        elif "__publisher_doc" in records.columns:
+            # raw-document regex form (A7 exact parity): regexp_extract over
+            # the payload BEFORE iteration, stamped as a passthrough column
+            # (reference: incRMLStateIndex, rml.ts:322-324)
+            publisher = F.col("__publisher_doc")
+        else:
+            publisher = F.lit("")
+        base = records.select(
+            "*",
+            compile_term_map(iri_tm, resolve, "subject").alias("__s"),
+            F.coalesce(publisher, F.lit("")).alias("__publisher"),
+            F.conv(F.hex(F.xxhash64(F.coalesce(watched, F.lit("")))), 16, 10).alias("__watched_hash"),
+        ).filter(F.col("__s").isNotNull())
+        code = _EVENT_CODES[event]
+        specs.append((pos, tm, code, state_id, base, resolve))
+        current.append(
+            base.select(
+                F.lit(pos).alias("tm"),
+                F.lit(code).alias("event"),
+                F.col("__s").alias("iri"),
+                F.col("__publisher").alias("publisher"),
+                F.col("__watched_hash").alias("cur_hash"),
+            )
+        )
+        states.append(
+            executor.state_store.read(state_id).select(
+                F.lit(pos).alias("tm"),
+                F.lit(code).alias("st_event"),
+                "iri",
+                "publisher",
+                F.col("watched_hash").alias("st_hash"),
+            )
+        )
 
-    subject = compile_term_map(iri_tm, resolve, "subject")
-    watched_tm = fn.params.get(voc.IDLAB_WATCHED_PROPERTY)
-    watched = (
-        compile_watched_term(watched_tm, resolve)
-        if watched_tm is not None
-        else F.lit("")
+    cur = _union(current).dropDuplicates(_KEY).withColumn("in_cur", F.lit(True))
+    st = _union(states).withColumn("in_st", F.lit(True))
+    joined = cur.join(st, _KEY, "full_outer")
+    event = F.coalesce(F.col("event"), F.col("st_event"))
+    in_cur = F.col("in_cur").isNotNull()
+    in_st = F.col("in_st").isNotNull()
+    # delete is evaluated only within publishers present in THIS
+    # snapshot — a publisher's absence must not delete other publishers'
+    # entities (the false-delete hazard the reference fixes by re-keying
+    # state files per publisher, rml.ts:302-320; here it is a window over
+    # the composite key's publisher part)
+    live = F.max(in_cur).over(Window.partitionBy("tm", "publisher"))
+    emit = (
+        F.when(event == _CREATE, in_cur & ~in_st)
+        .when(event == _UPDATE, in_cur & in_st & (F.col("cur_hash") != F.col("st_hash")))
+        .otherwise(in_st & ~in_cur & live)
     )
-    if executor.publisher_ref is not None:
-        # record-reference form: the id is reachable through the iterator
-        publisher = resolve(executor.publisher_ref)
-    elif "__publisher_doc" in records.columns:
-        # raw-document regex form (A7 exact parity): regexp_extract over
-        # the payload BEFORE iteration, stamped as a passthrough column
-        # (reference: incRMLStateIndex, rml.ts:322-324)
-        publisher = F.col("__publisher_doc")
-    else:
-        publisher = F.lit("")
-
-    base = (
-        records.withColumn("__s", subject)
-        .filter(F.col("__s").isNotNull())
-        .withColumn("__publisher", F.coalesce(publisher, F.lit("")))
-        .withColumn("__watched_hash", F.conv(F.hex(F.xxhash64(F.coalesce(watched, F.lit("")))), 16, 10))
+    # create keeps the stored fingerprint; update and delete store the
+    # current one, and rows unseen in this snapshot keep theirs
+    watched_hash = F.when(event == _CREATE, F.coalesce("st_hash", "cur_hash")).otherwise(
+        F.coalesce("cur_hash", "st_hash")
+    )
+    classified = _materialize(
+        joined.select(
+            "tm", "iri", "publisher", emit.alias("emit"), watched_hash.alias("watched_hash")
+        )
     )
 
-    state = executor.state_store.read(state_id)
-    current_entities = base.select(
-        F.col("__s").alias("iri"),
-        F.col("__publisher").alias("publisher"),
-        F.col("__watched_hash").alias("watched_hash"),
-    ).dropDuplicates(["iri", "publisher"])
-
-    key = ["iri", "publisher"]
-    if event == voc.IDLAB_EXPLICIT_CREATE:
-        emit_entities = current_entities.join(state, key, "left_anti")
-        new_state = state.unionByName(emit_entities).dropDuplicates(key)
-        emit = base.join(
-            emit_entities.select(F.col("iri").alias("__s"), F.col("publisher").alias("__publisher")),
-            ["__s", "__publisher"],
-            "left_semi",
-        )
-        frames = executor._project([tm], emit, resolve, by_name, F.col("__s"))
-        return frames, {state_id: new_state}
-
-    if event == voc.IDLAB_IMPLICIT_UPDATE:
-        changed = (
-            current_entities.alias("cur")
-            .join(state.alias("st"), key, "inner")
-            .filter(F.col("cur.watched_hash") != F.col("st.watched_hash"))
-            .select("cur.iri", "cur.publisher")
-        )
-        # state upsert: seen entities get current hashes; unseen-in-current rows survive
-        new_state = (
-            state.alias("st")
-            .join(current_entities.alias("cur"), key, "left_anti")
-            .unionByName(current_entities)
-        )
-        emit = base.join(
-            changed.select(F.col("iri").alias("__s"), F.col("publisher").alias("__publisher")),
-            ["__s", "__publisher"],
-            "left_semi",
-        )
-        frames = executor._project([tm], emit, resolve, by_name, F.col("__s"))
-        return frames, {state_id: new_state}
-
-    if event == voc.IDLAB_IMPLICIT_DELETE:
-        # Delete is evaluated only within publishers present in THIS
-        # snapshot — a publisher's absence must not delete other
-        # publishers' entities (the false-delete hazard the reference
-        # fixes by re-keying state files per publisher, rml.ts:302-320;
-        # here it is a semi-join on the composite key's publisher part).
-        current_publishers = current_entities.select("publisher").distinct()
-        deleted = state.join(current_publishers, "publisher", "left_semi").join(
-            current_entities, key, "left_anti"
-        )
-        new_state = state.join(current_publishers, "publisher", "left_anti").unionByName(
-            current_entities
-        )
-        # deleted subjects have no source record: project constant-only POMs
-        # (rdf:type / lifecycle) from the state rows themselves (the
-        # reference keeps only rdf:type/lifecycle POMs on delete TMs,
-        # src/rml/incrml.ts:554-576).
-        emit = deleted.select(
-            F.col("iri").alias("__s"), F.col("publisher").alias("__publisher")
-        )
-        lifecycle_tm = replace(
-            tm,
-            predicate_object_maps=[
-                pom
-                for pom in tm.predicate_object_maps
-                if pom.parent_triples_map is not None or pom.object.constant is not None
-            ],
-        )
-        frames = executor._project([lifecycle_tm], emit, _null_resolver(), by_name, F.col("__s"))
-        return frames, {state_id: new_state}
-
-    raise ValueError(f"unknown stateful function {event}")
+    frames: list[DataFrame] = []
+    state_updates: dict[str, DataFrame] = {}
+    for pos, tm, code, state_id, base, resolve in specs:
+        rows = classified.filter(F.col("tm") == pos)
+        emitted = rows.filter("emit").select(F.col("iri").alias("__s"), F.col("publisher").alias("__publisher"))
+        if code == _DELETE:
+            # deleted subjects have no source record: project constant-only
+            # POMs (rdf:type / lifecycle) from the state rows themselves (the
+            # reference keeps only rdf:type/lifecycle POMs on delete TMs,
+            # src/rml/incrml.ts:554-576)
+            lifecycle_tm = replace(
+                tm,
+                predicate_object_maps=[
+                    pom
+                    for pom in tm.predicate_object_maps
+                    if pom.parent_triples_map is not None or pom.object.constant is not None
+                ],
+            )
+            frames.extend(executor._project([lifecycle_tm], emitted, _null_resolver(), by_name, F.col("__s")))
+            rows = rows.filter(~F.col("emit"))
+        else:
+            emit_frame = base.join(emitted, ["__s", "__publisher"], "left_semi")
+            frames.extend(executor._project([tm], emit_frame, resolve, by_name, F.col("__s")))
+        state_updates[state_id] = rows.select("iri", "publisher", "watched_hash")
+    return frames, state_updates
 
 
 def _null_resolver():

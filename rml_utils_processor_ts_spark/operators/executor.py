@@ -19,10 +19,11 @@ Scale notes (100 TB design point):
     only shuffles in a mapping run are referencing-object-map joins and
     the final distinct, both AQE-managed (skew-join split + partition
     coalescing enabled in get_spark()).
-  * CDC (stateful FnO subjects) joins each event's current entities
-    against its versioned state table (Iceberg-style snapshot dirs) —
-    see cdc.py. A stateful source is iterated once per execution into a
-    checkpoint that the triples and every state update read.
+  * CDC (stateful FnO subjects): the current entities of every stateful
+    TriplesMap are classified in one full-outer join against the union
+    of their state tables, checkpointed once — see cdc.py. A stateful
+    source is iterated once per execution into a checkpoint; the emitted
+    triples and every state update read the two checkpoints.
 """
 
 from __future__ import annotations
@@ -46,7 +47,7 @@ from ..functions.xsdlex import canonicalize_typed
 from ..ioutil import local_frame
 from ..sources.registry import records_df, ref_column_name
 from .cc import _materialize
-from .cdc import execute_stateful_tm, watched_references
+from .cdc import execute_stateful, watched_references
 from .terms import (
     compile_datatype,
     compile_language,
@@ -452,11 +453,13 @@ class PlanExecutor:
         one new-state frame per state table.
 
         Lazy for every plan without a stateful (CDC) TriplesMap. A CDC
-        plan runs one Spark job per logical source that a stateful
-        TriplesMap reads: the source is iterated once, here, into a
-        checkpoint, and the triples and every state update read that
-        copy — otherwise each consumer (the triples and each state
-        table's commit) re-iterates the source."""
+        plan is eager: each logical source that a stateful TriplesMap
+        reads is iterated once, here, into a checkpoint, and all the
+        stateful TriplesMaps are classified against their state tables
+        in one full-outer join, checkpointed too. The triples and every
+        state update read those copies — otherwise each consumer (the
+        triples and the state commit) re-iterates the source and
+        re-joins the state."""
         by_name = {tm.name: tm for tm in plan.triples_maps}
         self._bindings = dict(plan.source_bindings)
         self._plan_source_refs(plan, by_name)
@@ -477,34 +480,29 @@ class PlanExecutor:
         # a fused group is the Spark-native inverse of that). A stateful
         # (CDC) TriplesMap projects alone, over its event's emit frame.
         fuse_groups: dict[str, list[TriplesMap]] = {}
-        stateful_tms: list[TriplesMap] = []
-        for tm in plan.triples_maps:
+        stateful_tms: list[tuple[int, TriplesMap]] = []
+        for pos, tm in enumerate(plan.triples_maps):
             if stateful_subject_spec(tm.subject_map.term_map) is None:
                 fuse_groups.setdefault(tm.logical_source.key(), []).append(tm)
             else:
-                stateful_tms.append(tm)
-        for ls in {tm.logical_source.key(): tm.logical_source for tm in stateful_tms}.values():
+                stateful_tms.append((pos, tm))
+        for ls in {tm.logical_source.key(): tm.logical_source for _, tm in stateful_tms}.values():
             self._records(ls, [], checkpoint=True)
         frames: list[DataFrame] = []
         state_updates: dict[str, DataFrame] = {}
         for tms in fuse_groups.values():
             records = self._records(tms[0].logical_source, [])
             frames.extend(self._project(tms, records, _resolver(set(records.columns)), by_name))
-        for tm in stateful_tms:
-            # _records unions the plan's source refs (iri, watched
-            # property, publisher_ref) into its key: this is the frame
-            # checkpointed above
-            records = self._records(tm.logical_source, [])
-            tm_frames, tm_state = execute_stateful_tm(
-                self,
-                tm,
-                stateful_subject_spec(tm.subject_map.term_map),
-                records,
-                _resolver(set(records.columns)),
-                by_name,
-            )
-            frames.extend(tm_frames)
-            state_updates.update(tm_state)
+        if stateful_tms:
+            stateful = []
+            for pos, tm in stateful_tms:
+                # _records unions the plan's source refs (iri, watched
+                # property, publisher_ref) into its key: this is the frame
+                # checkpointed above
+                records = self._records(tm.logical_source, [])
+                stateful.append((pos, tm, records, _resolver(set(records.columns))))
+            cdc_frames, state_updates = execute_stateful(self, stateful, by_name)
+            frames.extend(cdc_frames)
         if not frames:
             raise ValueError("plan produced no triples frames")
         triples = frames[0]

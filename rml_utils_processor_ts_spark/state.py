@@ -10,8 +10,11 @@ The contract every backend provides:
 * ``commit(state_id, df) -> int`` — atomically publish ``df`` as the
   new snapshot, returning its version/snapshot number. A killed run
   must never leave a half-committed snapshot visible.
-* ``commit_all(updates)`` — commit a batch of state tables (one per
-  IncRML state path).
+* ``commit_all(updates)`` — commit the state tables of one step (one
+  per IncRML state path). The versioned-parquet and in-memory stores
+  commit them atomically: after a failure every table reads its previous
+  version. The default implementation here commits table by table, so a
+  failure part-way leaves the tables at different versions.
 
 Consumers type against :class:`StateBackend`; nothing in the engine
 touches files or catalogs directly.
@@ -22,6 +25,7 @@ from __future__ import annotations
 import abc
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .ioutil import local_frame
 
@@ -80,19 +84,37 @@ class InMemoryStateStore(StateBackend):
         return local_frame(self.spark, rows, schema)
 
     def commit(self, state_id: str, df: DataFrame) -> int:
-        # limit(max_rows + 1) bounds the driver transfer even when the
-        # caller hands us an oversized frame — we never collect past the
-        # ceiling we are about to reject.
-        rows = [list(r) for r in df.limit(self.max_rows + 1).collect()]
-        if len(rows) > self.max_rows:
-            raise ValueError(
-                f"InMemoryStateStore.commit({state_id!r}): state exceeds "
-                f"max_rows={self.max_rows}; this backend collects snapshots "
-                "to the driver. Use operators.cdc.StateStore (versioned "
-                "parquet) or IcebergStateStore for pipeline-sized state."
-            )
-        self._versions.setdefault(state_id, []).append((df.schema, rows))
-        return len(self._versions[state_id])
+        return self.commit_all({state_id: df})[state_id]
+
+    def commit_all(self, updates: dict[str, DataFrame]) -> dict[str, int]:
+        """Collect the union of the tables once (one union per distinct
+        schema), check every table against ``max_rows``, and only then
+        record any of them."""
+        groups: dict[str, list[str]] = {}
+        for sid, df in updates.items():
+            groups.setdefault(df.schema.json(), []).append(sid)
+        collected: dict[str, list[list]] = {sid: [] for sid in updates}
+        for sids in groups.values():
+            # limit(max_rows + 1) bounds the driver transfer even when the
+            # caller hands us an oversized frame — we never collect past
+            # the ceiling we are about to reject.
+            union = None
+            for i, sid in enumerate(sids):
+                tagged = updates[sid].limit(self.max_rows + 1).select(F.lit(i).alias("__table"), "*")
+                union = tagged if union is None else union.union(tagged)
+            for r in union.collect():
+                collected[sids[r[0]]].append(list(r)[1:])
+        for sid, rows in collected.items():
+            if len(rows) > self.max_rows:
+                raise ValueError(
+                    f"InMemoryStateStore.commit_all: state {sid!r} exceeds "
+                    f"max_rows={self.max_rows}; this backend collects snapshots "
+                    "to the driver. Use operators.cdc.StateStore (versioned "
+                    "parquet) or IcebergStateStore for pipeline-sized state."
+                )
+        for sid, rows in collected.items():
+            self._versions.setdefault(sid, []).append((updates[sid].schema, rows))
+        return {sid: len(self._versions[sid]) for sid in updates}
 
 
 class IcebergStateStore(StateBackend):
@@ -101,39 +123,16 @@ class IcebergStateStore(StateBackend):
 
     Requires the iceberg-spark-runtime jar + a configured catalog (not
     present in this sandbox — constructing without them raises with the
-    exact configuration needed). The CDC state transitions map onto one
-    MERGE INTO per micro-batch instead of the full-snapshot rewrite the
-    parquet backend does:
+    exact configuration needed). It has only run against a scripted fake
+    session.
 
-    * explicitCreate — new entities enter the registry::
-
-        MERGE INTO state s USING current c ON s.state_key = c.state_key
-          AND s.iri = c.iri
-        WHEN NOT MATCHED THEN INSERT (state_key, iri, watched_hash)
-          VALUES (c.state_key, c.iri, c.watched_hash)
-
-    * implicitUpdate — fingerprint refresh for changed entities::
-
-        WHEN MATCHED AND s.watched_hash <> c.watched_hash
-          THEN UPDATE SET watched_hash = c.watched_hash
-
-    * implicitDelete — entities absent from the current snapshot leave
-      the registry (Spark 4 / Iceberg 1.5+ syntax)::
-
-        WHEN NOT MATCHED BY SOURCE
-          AND s.state_key IN (SELECT DISTINCT state_key FROM current)
-          THEN DELETE
-
-      (the state_key guard keeps OTHER publishers' rows intact — the
-      per-publisher re-keying semantics of A7, where one publisher's
-      snapshot must not delete another's entities.)
-
-    ``read`` is ``spark.table(name)`` (current snapshot); resume/replay
-    reads ``VERSION AS OF <snapshot_id>``. ``commit`` returns the new
-    snapshot id from the table's history. All three MERGE branches run
-    in ONE atomic Iceberg commit per state table per batch — the same
-    all-or-nothing visibility the parquet backend's LATEST repoint
-    provides.
+    ``read`` is ``spark.table(name)`` (current snapshot). ``commit`` is a
+    per-table ``createOrReplace``: a full rewrite of the table as one
+    Iceberg snapshot, not a MERGE INTO, returning the new snapshot id
+    from the table's history. ``commit_all`` is the default
+    table-by-table loop, so unlike the parquet and in-memory stores it
+    is not atomic across tables: a failure part-way leaves earlier
+    tables of the step committed.
     """
 
     def __init__(self, spark: SparkSession, namespace: str):

@@ -17,6 +17,8 @@ On a cluster the snapshot sequence is the Iceberg commit log
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -118,6 +120,40 @@ class SnapshotRunner:
         return merged
 
 
+# Catalyst and AQE replace a join, union branch or aggregate over an
+# empty input by an empty or null-padded relation. In a snapshot step
+# that makes the physical plans depend on which event sets are empty:
+# the first step (no state yet, nothing to update or delete) plans
+# without the CDC join, the semi-joins and the delete projection, so the
+# second step is the first to plan, code-generate and JIT-warm them and
+# takes about 1.5x as long as the steps after it. With the two rules off
+# during a step, every step runs the same plans.
+_EMPTY_RELATION_RULES = {
+    "spark.sql.optimizer.excludedRules": "org.apache.spark.sql.catalyst.optimizer.PropagateEmptyRelation",
+    "spark.sql.adaptive.optimizer.excludedRules": (
+        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+    ),
+}
+# the rules are session settings: steps of one session take turns
+_STEP_LOCK = threading.RLock()
+
+
+@contextmanager
+def _same_plans_when_empty(spark: SparkSession):
+    with _STEP_LOCK:
+        before = {key: spark.conf.get(key, None) for key in _EMPTY_RELATION_RULES}
+        for key, rule in _EMPTY_RELATION_RULES.items():
+            spark.conf.set(key, ",".join(r for r in (before[key], rule) if r))
+        try:
+            yield
+        finally:
+            for key, value in before.items():
+                if value is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, value)
+
+
 def _execute_and_commit(
     spark: SparkSession,
     plan: MappingPlan,
@@ -127,23 +163,25 @@ def _execute_and_commit(
 ) -> ExecutionResult:
     """One snapshot step, shared by both runners: execute the plan,
     materialize its triples, then commit its state updates."""
-    result = PlanExecutor(
-        spark,
-        state_store=store,
-        publisher_ref=publisher_ref,
-        publisher_regex=publisher_regex,
-    ).execute(plan)
-    # Materialize before the state commit: computed lazily after
-    # commit_all, the triples could read the state this step just wrote
-    # (a table-backed backend resolves its current snapshot when a query
-    # runs), so a step's output would observe its own state update.
-    # Neither the triples nor the state updates re-iterate a stateful
-    # source: both read the checkpoint execute() made of it.
-    # Executor-side checkpoint (never a driver collect — a table-backed
-    # source would pull the whole triple set through the driver).
-    result.triples = _materialize(result.triples)
-    if store is not None:
-        store.commit_all(result.state_updates)
+    with _same_plans_when_empty(spark):
+        result = PlanExecutor(
+            spark,
+            state_store=store,
+            publisher_ref=publisher_ref,
+            publisher_regex=publisher_regex,
+        ).execute(plan)
+        # Materialize before the state commit: computed lazily after
+        # commit_all, the triples could read the state this step just
+        # wrote (a table-backed backend resolves its current snapshot
+        # when a query runs), so a step's output would observe its own
+        # state update. Neither the triples nor the state updates
+        # re-iterate a stateful source: both read the checkpoint
+        # execute() made of it. Executor-side checkpoint (never a driver
+        # collect — a table-backed source would pull the whole triple
+        # set through the driver).
+        result.triples = _materialize(result.triples)
+        if store is not None:
+            store.commit_all(result.state_updates)
     return result
 
 

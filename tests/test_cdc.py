@@ -2,6 +2,10 @@
 (/root/reference/test/rml.test.ts:800-990): ordered snapshots through the
 stateful mapping assert per-run Create/Update/Delete events."""
 
+import hashlib
+import os
+import re
+
 import pytest
 from fixtures import RML_BASIC, RML_STATEFUL, XML_DOC, XML_DOC_V2, XML_DOC_V3_DROPPED
 
@@ -265,6 +269,66 @@ def test_cdc_through_custom_state_backend(spark, tmp_path):
         IcebergStateStore(spark, "no_such_catalog.ns")
 
 
+STATE_IDS = ("/tmp/create_state", "/tmp/update_state", "/tmp/delete_state")
+
+
+def _state_rows(store):
+    return {sid: sorted(tuple(r) for r in store.read(sid).collect()) for sid in STATE_IDS}
+
+
+def test_commit_fault_leaves_every_table_at_previous_version(spark, tmp_path, monkeypatch):
+    """One snapshot is one state version: a commit that dies after the
+    parquet write and before the manifest moves leaves all three state
+    tables at their previous version, and replaying the push emits the
+    events of a run that never failed."""
+    faulty = StateStore(spark, str(tmp_path / "faulty"))
+    clean = StateStore(spark, str(tmp_path / "clean"))
+    run_snapshot(spark, faulty, XML_DOC)
+    run_snapshot(spark, clean, XML_DOC)
+    before = _state_rows(faulty)
+    assert all(before.values())
+
+    def killed(manifest):
+        raise OSError("killed before the manifest moved")
+
+    monkeypatch.setattr(faulty, "_write_manifest", killed)
+    with pytest.raises(OSError, match="killed"):
+        run_snapshot(spark, faulty, XML_DOC_V3_DROPPED)
+    # the new version's data was written for every table...
+    written = sorted(os.listdir(tmp_path / "faulty" / "v_2"))
+    for sid in STATE_IDS:
+        assert f"state={hashlib.md5(sid.encode()).hexdigest()}" in written
+    # ...but no table moved to it
+    assert _state_rows(faulty) == before
+    monkeypatch.undo()
+
+    _, replayed = run_snapshot(spark, faulty, XML_DOC_V3_DROPPED)
+    _, expected = run_snapshot(spark, clean, XML_DOC_V3_DROPPED)
+    assert replayed == expected == {"Update": {EX + "001"}, "Delete": {EX + "002"}}
+    assert _state_rows(faulty) == _state_rows(clean)
+
+
+def test_state_store_refuses_per_table_layout(spark, tmp_path):
+    """State written one directory and one LATEST pointer per table is
+    refused, never silently read as empty."""
+    old = tmp_path / "state" / hashlib.md5(b"/tmp/create_state").hexdigest()
+    (old / "v_1").mkdir(parents=True)
+    (old / "LATEST").write_text("1")
+    with pytest.raises(ValueError, match=re.escape(str(old)) + ".*rebuilt"):
+        StateStore(spark, str(tmp_path / "state"))
+
+
+def test_shared_state_id_is_refused(spark):
+    """Two stateful TriplesMaps naming one idlab-fn:state would overwrite
+    each other's state table; execute() names both instead."""
+    from rml_utils_processor_ts_spark.state import InMemoryStateStore
+
+    mapping = RML_STATEFUL.format(source="dataset/data.xml").replace("/tmp/update_state", "/tmp/create_state")
+    plan = parse_mapping(mapping, {"dataset/data.xml": "inline:" + XML_DOC})
+    with pytest.raises(ValueError, match="map_test-mapping_000.*map_test-mapping_001.*/tmp/create_state"):
+        PlanExecutor(spark, state_store=InMemoryStateStore(spark)).execute(plan)
+
+
 def test_microbatch_iterates_each_stateful_source_once(spark, tmp_path):
     """One scan per stateful execution: a batch's documents are iterated
     once, not once per consumer (the triples plus the create, update and
@@ -359,15 +423,20 @@ def test_plain_plan_execute_starts_no_jobs(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
 
 
-def test_steady_snapshot_job_budget(spark, tmp_path):
+def test_steady_snapshot_job_budget(spark, tmp_path, monkeypatch):
     """Jobs of one steady snapshot: the third push of a 200-record XML
     document through SnapshotRunner over a parquet state store, counted
     in its own job group. Building the pushed document and the empty
     state frames from a Python list pickled them into a multi-partition
     RDD, and reading committed state inferred its schema with a footer
     job per table: 34 jobs here. As Arrow local relations, with state
-    read under STATE_SCHEMA, the snapshot runs 24 jobs, 25 in some
-    runs. The events must be unchanged: 64 updates, 10 deletes."""
+    read under STATE_SCHEMA, the snapshot ran 24 jobs, 25 in some runs.
+    Classifying the three stateful TriplesMaps in one checkpointed
+    full-outer join, instead of joining each event against its state
+    table once for the triples and once for its commit, and committing
+    the three tables as one partitioned parquet write, brings it to 10.
+    The state commit is one write job, counted in a job group of its
+    own. The events must be unchanged: 64 updates, 10 deletes."""
     from rml_utils_processor_ts_spark.streaming.snapshots import SnapshotRunner
 
     def doc(version, n=200):
@@ -383,11 +452,23 @@ def test_steady_snapshot_job_budget(spark, tmp_path):
     runner.push_snapshot("dataset/data.xml", doc(1))
     sc = spark.sparkContext
     group = "test_steady_snapshot_job_budget"
+    commit_group = group + "_commit"
+    commit_all = StateStore.commit_all
+
+    def commit_all_in_own_group(self, updates):
+        sc.setJobGroup(commit_group, commit_group)
+        try:
+            return commit_all(self, updates)
+        finally:
+            sc.setJobGroup(group, group)
+
+    monkeypatch.setattr(StateStore, "commit_all", commit_all_in_own_group)
     sc.setJobGroup(group, group)
     try:
         (result,) = runner.push_snapshot("dataset/data.xml", doc(2))
         sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
         jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        commit_jobs = len(sc.statusTracker().getJobIdsForGroup(commit_group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     events = {}
@@ -395,4 +476,5 @@ def test_steady_snapshot_job_budget(spark, tmp_path):
         kind = r["o"].rsplit("#", 1)[-1]
         events[kind] = events.get(kind, 0) + 1
     assert events == {"Update": 64, "Delete": 10}
-    assert jobs <= 25
+    assert commit_jobs == 1
+    assert jobs + commit_jobs <= 12, (jobs, commit_jobs)

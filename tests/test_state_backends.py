@@ -143,3 +143,21 @@ def test_in_memory_commit_refuses_oversized_state(spark):
         store.commit("s", big)
     # the failed commit must not have versioned anything
     assert store.commit("s", small) == 2
+
+
+def test_in_memory_commit_all_is_all_or_nothing(spark):
+    """commit_all checks every table against max_rows before it records
+    any of them: one oversized table leaves the others uncommitted."""
+    import pytest
+
+    from rml_utils_processor_ts_spark.operators.cdc import STATE_SCHEMA
+
+    store = InMemoryStateStore(spark, max_rows=3)
+    small = spark.createDataFrame([(f"k{i}", "i", "h") for i in range(3)], STATE_SCHEMA)
+    big = spark.createDataFrame([(f"k{i}", "i", "h") for i in range(4)], STATE_SCHEMA)
+    with pytest.raises(ValueError, match="'b' exceeds max_rows=3"):
+        store.commit_all({"a": small, "b": big})
+    assert store.read("a").count() == 0
+    assert store.read("b").count() == 0
+    assert store.commit_all({"a": small, "b": small}) == {"a": 1, "b": 1}
+    assert sorted(r[0] for r in store.read("b").collect()) == ["k0", "k1", "k2"]

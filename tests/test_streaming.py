@@ -41,6 +41,18 @@ def test_buffered_updates_replay_fifo(spark):
     assert (EX + "001", "some new data") in labels(ran2[0])
 
 
+def test_step_restores_session_optimizer_rules(spark):
+    """A snapshot step turns empty-relation pruning off only while it
+    runs; the session's rule exclusions read the same afterwards."""
+    keys = ["spark.sql.optimizer.excludedRules", "spark.sql.adaptive.optimizer.excludedRules"]
+    before = [spark.conf.get(k, None) for k in keys]
+    runner = SnapshotRunner(spark)
+    runner.add_mapping(RML_BASIC.format(source="dataset/data.xml"))
+    (ran,) = runner.push_snapshot("dataset/data.xml", XML_DOC)
+    assert (EX + "001", "some data") in labels(ran)
+    assert [spark.conf.get(k, None) for k in keys] == before
+
+
 def test_multi_source_barrier(spark):
     """Two declared sources: no run until both have data; then one run."""
     second = RML_BASIC.format(source="dataset/data2.xml").replace(

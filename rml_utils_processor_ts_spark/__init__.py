@@ -30,6 +30,16 @@ def get_spark(app_name: str = "rml_spark", cpus: str | None = None):
     coalescing), UTC session timezone (oracle parity + determinism),
     Arrow enabled (every Python stage is pandas/Arrow vectorized).
 
+    PySpark's DataFrame debugging is off
+    (``spark.python.sql.dataFrameDebugging.enabled``): with it on, every
+    DataFrame and Column call costs several gateway round trips to
+    record its Python call site. What is lost is the "== DataFrame =="
+    call-site section of an ``AnalysisException``; its class, message
+    and Python traceback stay. The package builds every expression
+    itself, so that section would name the engine's own code anyway.
+    The setting is static: it takes effect only in the session that
+    creates the SparkContext.
+
     Only builds the session: it starts no Spark job, so the first query
     pays the JVM's class-loading and JIT warm-up. Environment:
     ``SPARK_GRAFT_CPUS`` (when ``cpus`` is not given),
@@ -57,6 +67,9 @@ def get_spark(app_name: str = "rml_spark", cpus: str | None = None):
         # plans ~50 of them, so the default 100 entries evict them
         # before the next step and every step recompiled its plans
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # see the docstring: about half of a snapshot step's gateway
+        # round trips; static, so it can only be set on the builder
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # local mode: shuffle files on tmpfs kill disk-latency variance (a
     # real cluster has NVMe-local shuffle dirs; this is the sandbox twin).

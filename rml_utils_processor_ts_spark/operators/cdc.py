@@ -45,7 +45,8 @@ import hashlib
 import json
 import os
 import re
-from dataclasses import replace
+import shutil
+from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -140,7 +141,9 @@ class StateStore(StateBackend):
     atomic across its tables: the manifest moves with one ``os.replace``
     after the parquet write, so a killed commit leaves every table at its
     previous version, and replaying the step overwrites the orphaned
-    ``v_N``. Tables absent from a step keep their partition path. This
+    ``v_N``. Tables absent from a step keep their partition path. Once
+    the manifest has moved, every ``v_N`` it does not point into is
+    removed, so the root holds the current state, not its history. This
     is the local-filesystem stand-in for an Iceberg state table: one
     version directory ≙ one Iceberg snapshot, the manifest ≙ the
     current snapshot id.
@@ -201,7 +204,18 @@ class StateStore(StateBackend):
             part = f"state={_md5(sid)}"
             tables[sid] = f"v_{v}/{part}" if part in written else None
         self._write_manifest({"version": v, "tables": tables})
+        self._remove_unreferenced(tables)
         return {sid: v for sid in updates}
+
+    def _remove_unreferenced(self, tables: dict) -> None:
+        """Remove every version directory no table of the manifest points
+        into: superseded versions, and a version whose tables were all
+        empty. It runs after the manifest moved, so a crash here leaves
+        only unreferenced directories, which the next commit removes."""
+        live = {part.split("/", 1)[0] for part in tables.values() if part is not None}
+        for name in os.listdir(self.root):
+            if name.startswith("v_") and name not in live:
+                shutil.rmtree(os.path.join(self.root, name))
 
 
 def cdc_diff(current: DataFrame, state: DataFrame, key: list[str] | None = None) -> DataFrame:
@@ -235,6 +249,136 @@ _EVENT_CODES = {
 _KEY = ["tm", "iri", "publisher"]
 
 
+@dataclass
+class _Event:
+    """The Columns of one stateful TriplesMap in :func:`execute_stateful`."""
+
+    state_id: str
+    # the records plus the entity (__s), publisher and fingerprint
+    base: list[Column]
+    s_present: Column
+    current: list[Column]
+    state: list[Column]
+    # this TriplesMap's classified rows, and their emitted entities
+    mine: Column
+    emitted: list[Column]
+    # delete: the TriplesMap cut to what a state row can project
+    lifecycle: TriplesMap | None = None
+
+
+def _compile_event(executor, pos: int, tm: TriplesMap, columns: list[str], resolve) -> _Event:
+    fn = stateful_subject_spec(tm.subject_map.term_map)
+    event = fn.function_iri
+    if event not in _EVENT_CODES:
+        raise ValueError(f"unknown stateful function {event}")
+    iri_tm = fn.params.get(voc.IDLAB_IRI)
+    if iri_tm is None:
+        raise ValueError(f"{event} without idlab-fn:iri parameter")
+    state_tm = fn.params.get(voc.IDLAB_STATE)
+    if state_tm is None or state_tm.constant is None:
+        raise ValueError(f"{event} without constant idlab-fn:state parameter")
+    watched_tm = fn.params.get(voc.IDLAB_WATCHED_PROPERTY)
+    watched = compile_watched_term(watched_tm, resolve) if watched_tm is not None else F.lit("")
+    if executor.publisher_ref is not None:
+        # record-reference form: the id is reachable through the iterator
+        publisher = resolve(executor.publisher_ref)
+    elif "__publisher_doc" in columns:
+        # raw-document regex form (A7 exact parity): regexp_extract over
+        # the payload BEFORE iteration, stamped as a passthrough column
+        # (reference: incRMLStateIndex, rml.ts:322-324)
+        publisher = F.col("__publisher_doc")
+    else:
+        publisher = F.lit("")
+    code = _EVENT_CODES[event]
+    lifecycle = None
+    if code == _DELETE:
+        # deleted subjects have no source record: project constant-only
+        # POMs (rdf:type / lifecycle) from the state rows themselves (the
+        # reference keeps only rdf:type/lifecycle POMs on delete TMs,
+        # src/rml/incrml.ts:554-576)
+        lifecycle = replace(
+            tm,
+            predicate_object_maps=[
+                pom
+                for pom in tm.predicate_object_maps
+                if pom.parent_triples_map is not None or pom.object.constant is not None
+            ],
+        )
+    return _Event(
+        state_id=state_tm.constant,
+        base=[
+            F.col("*"),
+            compile_term_map(iri_tm, resolve, "subject").alias("__s"),
+            F.coalesce(publisher, F.lit("")).alias("__publisher"),
+            F.conv(F.hex(F.xxhash64(F.coalesce(watched, F.lit("")))), 16, 10).alias("__watched_hash"),
+        ],
+        s_present=F.col("__s").isNotNull(),
+        current=[
+            F.lit(pos).alias("tm"),
+            F.lit(code).alias("event"),
+            F.col("__s").alias("iri"),
+            F.col("__publisher").alias("publisher"),
+            F.col("__watched_hash").alias("cur_hash"),
+        ],
+        state=[
+            F.lit(pos).alias("tm"),
+            F.lit(code).alias("st_event"),
+            F.col("iri"),
+            F.col("publisher"),
+            F.col("watched_hash").alias("st_hash"),
+        ],
+        mine=F.col("tm") == pos,
+        emitted=[F.col("iri").alias("__s"), F.col("publisher").alias("__publisher")],
+        lifecycle=lifecycle,
+    )
+
+
+@dataclass
+class _Classification:
+    """The Columns :func:`execute_stateful` classifies all events with."""
+
+    in_cur: Column
+    in_st: Column
+    classified: list[Column]
+    kept: Column
+    new_state: list[Column]
+
+
+def _compile_classification() -> _Classification:
+    event = F.coalesce(F.col("event"), F.col("st_event"))
+    in_cur = F.col("in_cur").isNotNull()
+    in_st = F.col("in_st").isNotNull()
+    # delete is evaluated only within publishers present in THIS
+    # snapshot — a publisher's absence must not delete other publishers'
+    # entities (the false-delete hazard the reference fixes by re-keying
+    # state files per publisher, rml.ts:302-320; here it is a window over
+    # the composite key's publisher part)
+    live = F.max(in_cur).over(Window.partitionBy("tm", "publisher"))
+    emit = (
+        F.when(event == _CREATE, in_cur & ~in_st)
+        .when(event == _UPDATE, in_cur & in_st & (F.col("cur_hash") != F.col("st_hash")))
+        .otherwise(in_st & ~in_cur & live)
+    )
+    # create keeps the stored fingerprint; update and delete store the
+    # current one, and rows unseen in this snapshot keep theirs
+    watched_hash = F.when(event == _CREATE, F.coalesce("st_hash", "cur_hash")).otherwise(
+        F.coalesce("cur_hash", "st_hash")
+    )
+    return _Classification(
+        in_cur=F.lit(True),
+        in_st=F.lit(True),
+        classified=[
+            F.col("tm"),
+            F.col("iri"),
+            F.col("publisher"),
+            emit.alias("emit"),
+            watched_hash.alias("watched_hash"),
+        ],
+        kept=~F.col("emit"),
+        new_state=[F.col("iri"), F.col("publisher"), F.col("watched_hash")],
+    )
+
+
 def execute_stateful(
     executor,
     stateful: list[tuple[int, TriplesMap, DataFrame, object]],
@@ -257,114 +401,40 @@ def execute_stateful(
     current = []
     states = []
     for pos, tm, records, resolve in stateful:
-        fn = stateful_subject_spec(tm.subject_map.term_map)
-        event = fn.function_iri
-        if event not in _EVENT_CODES:
-            raise ValueError(f"unknown stateful function {event}")
-        iri_tm = fn.params.get(voc.IDLAB_IRI)
-        if iri_tm is None:
-            raise ValueError(f"{event} without idlab-fn:iri parameter")
-        state_tm = fn.params.get(voc.IDLAB_STATE)
-        if state_tm is None or state_tm.constant is None:
-            raise ValueError(f"{event} without constant idlab-fn:state parameter")
-        state_id = state_tm.constant
-        if state_id in owners:
+        ev = executor._compiled(
+            (tm.name, "cdc", tuple(records.columns)),
+            lambda: _compile_event(executor, pos, tm, records.columns, resolve),
+        )
+        if ev.state_id in owners:
             raise ValueError(
-                f"TriplesMaps {owners[state_id]} and {tm.name} share idlab-fn:state "
-                f"{state_id!r}; each stateful TriplesMap needs its own state table"
+                f"TriplesMaps {owners[ev.state_id]} and {tm.name} share idlab-fn:state "
+                f"{ev.state_id!r}; each stateful TriplesMap needs its own state table"
             )
-        owners[state_id] = tm.name
-        watched_tm = fn.params.get(voc.IDLAB_WATCHED_PROPERTY)
-        watched = compile_watched_term(watched_tm, resolve) if watched_tm is not None else F.lit("")
-        if executor.publisher_ref is not None:
-            # record-reference form: the id is reachable through the iterator
-            publisher = resolve(executor.publisher_ref)
-        elif "__publisher_doc" in records.columns:
-            # raw-document regex form (A7 exact parity): regexp_extract over
-            # the payload BEFORE iteration, stamped as a passthrough column
-            # (reference: incRMLStateIndex, rml.ts:322-324)
-            publisher = F.col("__publisher_doc")
-        else:
-            publisher = F.lit("")
-        base = records.select(
-            "*",
-            compile_term_map(iri_tm, resolve, "subject").alias("__s"),
-            F.coalesce(publisher, F.lit("")).alias("__publisher"),
-            F.conv(F.hex(F.xxhash64(F.coalesce(watched, F.lit("")))), 16, 10).alias("__watched_hash"),
-        ).filter(F.col("__s").isNotNull())
-        code = _EVENT_CODES[event]
-        specs.append((pos, tm, code, state_id, base, resolve))
-        current.append(
-            base.select(
-                F.lit(pos).alias("tm"),
-                F.lit(code).alias("event"),
-                F.col("__s").alias("iri"),
-                F.col("__publisher").alias("publisher"),
-                F.col("__watched_hash").alias("cur_hash"),
-            )
-        )
-        states.append(
-            executor.state_store.read(state_id).select(
-                F.lit(pos).alias("tm"),
-                F.lit(code).alias("st_event"),
-                "iri",
-                "publisher",
-                F.col("watched_hash").alias("st_hash"),
-            )
-        )
+        owners[ev.state_id] = tm.name
+        base = records.select(*ev.base).filter(ev.s_present)
+        specs.append((tm, ev, base, resolve))
+        current.append(base.select(*ev.current))
+        states.append(executor.state_store.read(ev.state_id).select(*ev.state))
 
-    cur = _union(current).dropDuplicates(_KEY).withColumn("in_cur", F.lit(True))
-    st = _union(states).withColumn("in_st", F.lit(True))
-    joined = cur.join(st, _KEY, "full_outer")
-    event = F.coalesce(F.col("event"), F.col("st_event"))
-    in_cur = F.col("in_cur").isNotNull()
-    in_st = F.col("in_st").isNotNull()
-    # delete is evaluated only within publishers present in THIS
-    # snapshot — a publisher's absence must not delete other publishers'
-    # entities (the false-delete hazard the reference fixes by re-keying
-    # state files per publisher, rml.ts:302-320; here it is a window over
-    # the composite key's publisher part)
-    live = F.max(in_cur).over(Window.partitionBy("tm", "publisher"))
-    emit = (
-        F.when(event == _CREATE, in_cur & ~in_st)
-        .when(event == _UPDATE, in_cur & in_st & (F.col("cur_hash") != F.col("st_hash")))
-        .otherwise(in_st & ~in_cur & live)
-    )
-    # create keeps the stored fingerprint; update and delete store the
-    # current one, and rows unseen in this snapshot keep theirs
-    watched_hash = F.when(event == _CREATE, F.coalesce("st_hash", "cur_hash")).otherwise(
-        F.coalesce("cur_hash", "st_hash")
-    )
-    classified = _materialize(
-        joined.select(
-            "tm", "iri", "publisher", emit.alias("emit"), watched_hash.alias("watched_hash")
-        )
-    )
+    c = executor._compiled(("cdc",), _compile_classification)
+    cur = _union(current).dropDuplicates(_KEY).withColumn("in_cur", c.in_cur)
+    st = _union(states).withColumn("in_st", c.in_st)
+    classified = _materialize(cur.join(st, _KEY, "full_outer").select(*c.classified))
 
     frames: list[DataFrame] = []
     state_updates: dict[str, DataFrame] = {}
-    for pos, tm, code, state_id, base, resolve in specs:
-        rows = classified.filter(F.col("tm") == pos)
-        emitted = rows.filter("emit").select(F.col("iri").alias("__s"), F.col("publisher").alias("__publisher"))
-        if code == _DELETE:
-            # deleted subjects have no source record: project constant-only
-            # POMs (rdf:type / lifecycle) from the state rows themselves (the
-            # reference keeps only rdf:type/lifecycle POMs on delete TMs,
-            # src/rml/incrml.ts:554-576)
-            lifecycle_tm = replace(
-                tm,
-                predicate_object_maps=[
-                    pom
-                    for pom in tm.predicate_object_maps
-                    if pom.parent_triples_map is not None or pom.object.constant is not None
-                ],
+    for tm, ev, base, resolve in specs:
+        rows = classified.filter(ev.mine)
+        emitted = rows.filter("emit").select(*ev.emitted)
+        if ev.lifecycle is not None:
+            frames.extend(
+                executor._project([ev.lifecycle], emitted, _null_resolver(), by_name, "__s", role="delete")
             )
-            frames.extend(executor._project([lifecycle_tm], emitted, _null_resolver(), by_name, F.col("__s")))
-            rows = rows.filter(~F.col("emit"))
+            rows = rows.filter(c.kept)
         else:
             emit_frame = base.join(emitted, ["__s", "__publisher"], "left_semi")
-            frames.extend(executor._project([tm], emit_frame, resolve, by_name, F.col("__s")))
-        state_updates[state_id] = rows.select("iri", "publisher", "watched_hash")
+            frames.extend(executor._project([tm], emit_frame, resolve, by_name, "__s", role="emit"))
+        state_updates[ev.state_id] = rows.select(*c.new_state)
     return frames, state_updates
 
 

@@ -70,12 +70,32 @@ class ExecutionResult:
     # resolved (on_missing_source="skip" — the reference's warn-and-
     # continue, /root/reference/src/rml/rml.ts:264-269)
     skipped: list[str] = field(default_factory=list)
+    # every target id the executed plan can route a quad to (None:
+    # unknown); the ids present in ``triples`` are a subset
+    reachable_targets: frozenset[str] | None = None
 
     def target_ids(self) -> list[str]:
+        """The target ids present in ``triples``. A plan that can reach
+        one target only needs no distinct collect (2 jobs), just an
+        emptiness probe (1 job)."""
+        if self.reachable_targets is not None and len(self.reachable_targets) == 1:
+            return [] if self.triples.isEmpty() else list(self.reachable_targets)
         return [r[0] for r in self.triples.select("target_id").distinct().collect()]
 
     def for_target(self, target_id: str) -> DataFrame:
         return self.triples.filter(F.col("target_id") == target_id).drop("target_id")
+
+
+def _reachable_target_ids(plan: MappingPlan) -> frozenset[str]:
+    """The ids :meth:`PlanExecutor._target_id` and
+    :meth:`PlanExecutor._pom_target_ids` can give a quad of ``plan``: a
+    subject-map target or "default", and every POM target."""
+    ids: set[str] = set()
+    for tm in plan.triples_maps:
+        lt = tm.subject_map.logical_target
+        ids.add(lt.target_id if lt is not None else "default")
+        ids.update(pom.logical_target.target_id for pom in tm.predicate_object_maps if pom.logical_target is not None)
+    return frozenset(ids)
 
 
 def _resolver(records_cols: set[str]):
@@ -250,15 +270,51 @@ def _codegen_isolate(c: Column) -> Column:
     return F.element_at(F.transform(F.array(c), lambda x: x), 1)
 
 
-def _stage_in_batches(records: DataFrame, named_cols: list[tuple[str, Column]]) -> DataFrame:
-    """Stage heavy datatypeMap object columns so the generated code
-    stays compilable (round-9 fuzz shape, PLANS.md): a small count
-    rides the fused projection untouched; a large count is isolated
-    behind :func:`_codegen_isolate` (see _DTMAP_FUSED_MAX)."""
+def _staged_columns(named_cols: list[tuple[str, Column]]) -> list[Column]:
+    """The select list staging heavy datatypeMap object columns so the
+    generated code stays compilable (round-9 fuzz shape, PLANS.md): a
+    small count rides the fused projection untouched; a large count is
+    isolated behind :func:`_codegen_isolate` (see _DTMAP_FUSED_MAX).
+    Empty when there is nothing to stage."""
     if not named_cols:
-        return records
+        return []
     wrap = _codegen_isolate if len(named_cols) > _DTMAP_FUSED_MAX else (lambda c: c)
-    return records.select("*", *[wrap(c).alias(name) for name, c in named_cols])
+    return [F.col("*"), *[wrap(c).alias(name) for name, c in named_cols]]
+
+
+def _ldes_member_columns(lt, member: Column, graph: Column) -> list[Column]:
+    """The tree:member quad of an LDES member: the stream is its subject."""
+    return [
+        F.lit(lt.ldes_base_iri).alias("s"),
+        F.lit("IRI").alias("s_termtype"),
+        F.lit(voc.TREE_MEMBER).alias("p"),
+        member.alias("o"),
+        F.lit("IRI").alias("o_termtype"),
+        F.lit(None).cast("string").alias("o_datatype"),
+        F.lit(None).cast("string").alias("o_lang"),
+        graph.alias("g"),
+        F.lit(lt.target_id).alias("target_id"),
+    ]
+
+
+@dataclass
+class _Projection:
+    """The Columns of one :meth:`PlanExecutor._project` group."""
+
+    stage: list[Column]
+    dtmap: list[Column]
+    # LDES: the version timestamp, then the versioned subjects
+    ts: Column | None = None
+    vsubj: list[Column] = field(default_factory=list)
+    graphs: list[Column] = field(default_factory=list)
+    # by TriplesMap position: the tree:member columns and their filter
+    streams: dict[int, tuple[list[Column], Column]] = field(default_factory=dict)
+    # by TriplesMap position: the subject, its filter, the join POM groups
+    joins: dict[int, tuple[Column, Column, list[list[PredicateObjectMap]]]] = field(default_factory=dict)
+    quads: Column | None = None
+    unpack: list[Column] = field(default_factory=list)
+    keep: Column | None = None
+    out: list[Column] = field(default_factory=list)
 
 
 def _group_join_poms(
@@ -283,6 +339,21 @@ def _group_join_poms(
     return groups
 
 
+@dataclass
+class _Join:
+    """The Columns of one :meth:`PlanExecutor._join_pom` group."""
+
+    po_present: Column
+    child: list[Column] = field(default_factory=list)
+    child_filters: list[Column] = field(default_factory=list)
+    parent: list[Column] = field(default_factory=list)
+    cond: Column | None = None
+    # several variants: the post-join explode and its filters
+    variants: Column | None = None
+    variant_filters: list[Column] = field(default_factory=list)
+    out: list[Column] = field(default_factory=list)
+
+
 class PlanExecutor:
     """Compile + run a MappingPlan on a SparkSession.
 
@@ -303,6 +374,7 @@ class PlanExecutor:
         ldes_ts_col: str = "warc_ts",
         on_missing_source: str = "raise",
         validate_iris: bool = True,
+        compiled: dict | None = None,
     ):
         self.spark = spark
         self.state_store = state_store
@@ -333,6 +405,13 @@ class PlanExecutor:
         # catches rml:reference-sourced and relative IRIs. Two rlikes
         # per IRI column, pure codegen.
         self.validate_iris = validate_iris
+        # Columns compiled from the mapping (see _compiled), keyed by
+        # TriplesMap names, role and records column names. A runner that
+        # executes one mapping at every step passes the same dict to each
+        # step's executor, so the expressions are built once; by default
+        # each execute() compiles afresh. Data is never cached: every
+        # step scans its sources again.
+        self._shared_columns = compiled
         self._scan_cache: dict[tuple[str, tuple[str, ...]], DataFrame] = {}
 
     # -- scans -------------------------------------------------------------
@@ -461,12 +540,15 @@ class PlanExecutor:
         triples and the state commit) re-iterates the source and
         re-joins the state."""
         by_name = {tm.name: tm for tm in plan.triples_maps}
+        self._columns = self._shared_columns if self._shared_columns is not None else {}
         self._bindings = dict(plan.source_bindings)
         self._plan_source_refs(plan, by_name)
         skipped: list[str] = []
         if self.on_missing_source == "skip":
             kept, skipped = self._drop_unresolvable_tms(plan)
             if skipped:
+                # the kept TriplesMaps differ from the mapping's
+                self._columns = {}
                 plan = replace(plan, triples_maps=kept)
                 by_name = {tm.name: tm for tm in plan.triples_maps}
                 if not kept:
@@ -509,13 +591,29 @@ class PlanExecutor:
         for f in frames[1:]:
             triples = triples.unionByName(f)
         if self.validate_iris:
-            check_positions = _plan_iri_check_positions(plan)
+            check_positions = frozenset(_plan_iri_check_positions(plan))
             if check_positions:
-                triples = triples.filter(_valid_iri_quad(check_positions))
+                triples = triples.filter(
+                    self._compiled(("iri check", check_positions), lambda: _valid_iri_quad(check_positions))
+                )
         if self.dedupe:
             # RDF graphs are sets (B12): duplicate quads collapse.
             triples = triples.dropDuplicates(TRIPLE_COLUMNS)
-        return ExecutionResult(triples=triples, state_updates=state_updates, skipped=skipped)
+        return ExecutionResult(
+            triples=triples,
+            state_updates=state_updates,
+            skipped=skipped,
+            reachable_targets=_reachable_target_ids(plan),
+        )
+
+    def _compiled(self, key: tuple, build):
+        """``build()``'s Columns, built once per ``key``. A Column is an
+        unresolved expression, so one compiled from the mapping and the
+        records frame's column names resolves against every frame with
+        those names; each key ends with them."""
+        if key not in self._columns:
+            self._columns[key] = build()
+        return self._columns[key]
 
     def _project(
         self,
@@ -523,15 +621,44 @@ class PlanExecutor:
         records: DataFrame,
         resolve,
         by_name: dict[str, TriplesMap],
-        subject: Column | None = None,
+        subject: str | None = None,
+        role: str = "project",
     ) -> list[DataFrame]:
         """Term-map projection (B6-B8, B13) for a group of TriplesMaps
         over one records frame, in one pass: per-record array of
         fully-formed quad structs (subject/graph/target embedded per
         struct) -> one explode. Referencing-object-map joins still
         produce their own frames (they shuffle anyway) but reuse the same
-        record scan. ``subject``, given for a one-TriplesMap group, replaces
-        its compiled subject (CDC: the event frame's ``__s`` column)."""
+        record scan. ``subject``, given for a one-TriplesMap group, names
+        the records column that replaces its compiled subject (CDC: the
+        event frame's ``__s``). ``role`` tells apart projections of one
+        TriplesMap that differ in more than their records columns."""
+        key = (tuple(tm.name for tm in tms), role, tuple(records.columns))
+        c = self._compiled(key, lambda: self._compile_projection(tms, records.columns, resolve, subject))
+        records = records.select(*c.stage)
+        if c.dtmap:
+            records = records.select(*c.dtmap)
+        if c.ts is not None:
+            records = records.withColumn("__ts", c.ts).select(*c.vsubj)
+        frames: list[DataFrame] = []
+        for i, tm in enumerate(tms):
+            if i in c.streams:
+                frames.extend(self._ldes_stream_frames(tm, records, *c.streams[i]))
+            if i in c.joins:
+                s_col, s_present, groups = c.joins[i]
+                base = records.withColumn("__s", s_col).filter(s_present)
+                for j, grp in enumerate(groups):
+                    frames.append(
+                        self._join_pom(tm, grp, base, resolve, c.graphs[i], by_name, key + (i, j))
+                    )
+        if c.quads is not None:
+            exploded = records.withColumn("__q", c.quads).select(*c.unpack)
+            frames.insert(0, exploded.filter(c.keep).select(*c.out))
+        return frames
+
+    def _compile_projection(self, tms, columns: list[str], resolve, subject: str | None) -> _Projection:
+        """The Columns of :meth:`_project`: pure functions of the
+        TriplesMaps and the records column names."""
         # Materialize each TM's subject IRI (template + IRI-encode, the
         # most expensive term expression) and graph ONCE per record:
         # they recur in every quad struct of the TM, and Generate does
@@ -540,7 +667,7 @@ class PlanExecutor:
         # the codegen unit (measured on rml_customer_triples, PLANS.md).
         subj_cols = [
             (
-                subject
+                F.col(subject)
                 if subject is not None
                 else compile_term_map(tm.subject_map.term_map, resolve, "subject")
             ).alias(f"__subj_{i}")
@@ -565,8 +692,9 @@ class PlanExecutor:
             and pom.object is not None
             and pom.object.datatype_map is not None
         ]
-        records = records.select("*", *subj_cols, *graph_cols)
-        records = _stage_in_batches(records, dtmap_cols)
+        c = _Projection(
+            stage=[F.col("*"), *subj_cols, *graph_cols], dtmap=_staged_columns(dtmap_cols)
+        )
         ldes = {
             i: tm.subject_map.logical_target
             for i, tm in enumerate(tms)
@@ -578,27 +706,27 @@ class PlanExecutor:
             # version_ts — deterministic, never wall-clock (reference
             # behavior README.md:43); an immutable member's subject is
             # the base subject + "#" + timestamp
-            ts = (
+            c.ts = (
                 F.date_format(F.col(self.ldes_ts_col), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-                if self.ldes_ts_col in records.columns
+                if self.ldes_ts_col in columns
                 else F.lit(self.version_ts or "1970-01-01T00:00:00Z")
             )
-            records = records.withColumn("__ts", ts).select(
-                "*",
+            c.vsubj = [
+                F.col("*"),
                 *[
                     F.concat(F.col(f"__subj_{i}"), F.lit("#"), F.col("__ts")).alias(f"__vsubj_{i}")
                     for i, lt in ldes.items()
                     if lt.ldes_immutable_iri
                 ],
-            )
+            ]
 
         quad_structs: list[Column] = []
-        frames: list[DataFrame] = []
         for i, tm in enumerate(tms):
             lt = ldes.get(i)
             s_col = F.col(f"__vsubj_{i}" if lt is not None and lt.ldes_immutable_iri else f"__subj_{i}")
             s_ttype = effective_term_type(tm.subject_map.term_map, "subject")
             graph = F.col(f"__g_{i}")
+            c.graphs.append(graph)
             target = self._target_id(tm)
 
             def quad(pred: Column, obj: Column, ttype, dtype=None, lang=None, *, subject=s_col, s_ttype=s_ttype, graph=graph, target=target) -> Column:
@@ -638,14 +766,12 @@ class PlanExecutor:
                     )
                 )
                 if lt.ldes_base_iri:
-                    frames.extend(self._ldes_stream_frames(tm, records, s_col, graph))
+                    c.streams[i] = (_ldes_member_columns(lt, s_col, graph), F.col("o").isNotNull())
             tm_join_poms = [
                 pom for pom in tm.predicate_object_maps if pom.parent_triples_map is not None
             ]
             if tm_join_poms:
-                base = records.withColumn("__s", s_col).filter(F.col("__s").isNotNull())
-                for grp in _group_join_poms(tm_join_poms):
-                    frames.append(self._join_pom(tm, grp, base, resolve, graph, by_name))
+                c.joins[i] = (s_col, F.col("__s").isNotNull(), _group_join_poms(tm_join_poms))
             for j, pom in enumerate(tm.predicate_object_maps):
                 if pom.parent_triples_map is not None:
                     continue
@@ -681,28 +807,26 @@ class PlanExecutor:
                         )
 
         if quad_structs:
-            exploded = records.withColumn("__q", F.explode(F.array(*quad_structs)))
+            c.quads = F.explode(F.array(*quad_structs))
             if subject is None:
-                exploded = exploded.select("__q.*")
+                c.unpack = [F.col("__q.*")]
             else:
                 # a given subject (one TriplesMap) is every quad's subject:
                 # taking `s` and its term type from outside the generator
                 # keeps the emit frame's hash partitioning on the subject,
                 # which the final dedupe then reuses instead of shuffling
                 # the triples once more
-                exploded = exploded.select(
+                c.unpack = [
                     s_col.alias("s"),
                     F.lit(s_ttype).alias("s_termtype"),
-                    *[F.col(f"__q.{c}") for c in TRIPLE_COLUMNS[2:]],
-                )
-            exploded = exploded.filter(F.col("s").isNotNull() & F.col("o").isNotNull()).select(
-                *TRIPLE_COLUMNS
-            )
-            frames.insert(0, exploded)
-        return frames
+                    *[F.col(f"__q.{n}") for n in TRIPLE_COLUMNS[2:]],
+                ]
+            c.keep = F.col("s").isNotNull() & F.col("o").isNotNull()
+            c.out = [F.col(n) for n in TRIPLE_COLUMNS]
+        return c
 
     def _ldes_stream_frames(
-        self, tm: TriplesMap, records: DataFrame, member: Column, graph: Column
+        self, tm: TriplesMap, records: DataFrame, members: list[Column], member_present: Column
     ) -> list[DataFrame]:
         """rmlt:ldesBaseIRI names the event stream itself: every member
         hangs off it via tree:member, and the stream's metadata (type/
@@ -710,19 +834,8 @@ class PlanExecutor:
         the quads an LDES consumer needs to traverse the stream
         (reference: src/rml/incrml.ts:303-338). The member quads have
         the stream, not the member, as subject, so they leave the
-        TriplesMap's explode."""
+        TriplesMap's explode; ``members`` are their columns."""
         lt = tm.subject_map.logical_target
-        members = records.select(
-            F.lit(lt.ldes_base_iri).alias("s"),
-            F.lit("IRI").alias("s_termtype"),
-            F.lit(voc.TREE_MEMBER).alias("p"),
-            member.alias("o"),
-            F.lit("IRI").alias("o_termtype"),
-            F.lit(None).cast("string").alias("o_datatype"),
-            F.lit(None).cast("string").alias("o_lang"),
-            graph.alias("g"),
-            F.lit(lt.target_id).alias("target_id"),
-        ).filter(F.col("o").isNotNull())
         meta = [(voc.RDF_TYPE, voc.LDES_EVENT_STREAM)]
         meta.append((voc.LDES_TIMESTAMP_PATH, lt.ldes_timestamp_path or voc.DCT_MODIFIED))
         meta.append((voc.LDES_VERSION_OF_PATH, lt.ldes_version_of_path or voc.DCT_IS_VERSION_OF))
@@ -735,7 +848,7 @@ class PlanExecutor:
         gm = tm.subject_map.graph_map
         meta_graph = gm.constant if gm is not None and gm.constant is not None else None
         return [
-            members,
+            records.select(*members).filter(member_present),
             local_frame(
                 self.spark,
                 [
@@ -793,6 +906,7 @@ class PlanExecutor:
         resolve,
         graph: Column,
         by_name: dict[str, TriplesMap],
+        key: tuple,
     ) -> DataFrame:
         """Referencing object maps (B9) sharing (rr:parentTriplesMap, join
         conditions): child.expr == parent.expr equi-join; object = parent
@@ -819,25 +933,51 @@ class PlanExecutor:
         # onto the child row: no join, no second scan, and never the
         # cross join that a condition-less DataFrame join would produce
         # (a scale hazard at web corpus sizes, not just a wrong answer).
-        same_row = not pom.join_conditions
-        if same_row:
+        if not pom.join_conditions:
             if parent_tm.logical_source != tm.logical_source:
                 raise ValueError(
                     "referencing object map without rml:joinCondition requires "
                     f"identical logical sources (R2RML §11): {tm.name} -> {parent_tm.name}"
                 )
-            parent_subject_child = compile_term_map(
-                parent_tm.subject_map.term_map, resolve, "subject"
-            )
-            join_exprs_child = []
+            parent_records = None
+            parent_columns = None
         else:
             parent_refs = parent_tm.subject_map.term_map.references() + [
                 r for jc in pom.join_conditions for r in jc.parent.references()
             ]
             parent_records = self._records(parent_tm.logical_source, parent_refs)
-            parent_resolve = _resolver(set(parent_records.columns))
-            parent_subject = compile_term_map(parent_tm.subject_map.term_map, parent_resolve, "subject")
+            parent_columns = parent_records.columns
+        c = self._compiled(
+            key + (parent_columns and tuple(parent_columns),),
+            lambda: self._compile_join(tm, poms, parent_tm, resolve, graph, parent_columns),
+        )
+        child_side = child_base.select(*c.child)
+        for f in c.child_filters:
+            child_side = child_side.filter(f)
+        if parent_records is None:
+            joined = child_side.filter(c.po_present)
+        else:
+            parent_side = parent_records.select(*c.parent).filter(c.po_present).dropDuplicates()
+            joined = child_side.join(parent_side, c.cond, "inner")
+        if c.variants is not None:
+            joined = joined.withColumn("__pom", c.variants)
+            for f in c.variant_filters:
+                joined = joined.filter(f)
+        return joined.select(*c.out)
 
+    def _compile_join(self, tm, poms, parent_tm, resolve, graph: Column, parent_columns: list[str] | None) -> _Join:
+        """The Columns of :meth:`_join_pom`; ``parent_columns`` is None
+        for a same-row referencing object map."""
+        pom = poms[0]
+        same_row = parent_columns is None
+        if same_row:
+            parent_subject_child = compile_term_map(
+                parent_tm.subject_map.term_map, resolve, "subject"
+            )
+            join_exprs_child = []
+        else:
+            parent_resolve = _resolver(set(parent_columns))
+            parent_subject = compile_term_map(parent_tm.subject_map.term_map, parent_resolve, "subject")
             join_exprs_child = [compile_term_map(jc.child, resolve, "value") for jc in pom.join_conditions]
             join_exprs_parent = [compile_term_map(jc.parent, parent_resolve, "value") for jc in pom.join_conditions]
 
@@ -865,21 +1005,22 @@ class PlanExecutor:
                 for tid in self._pom_target_ids(tm, p):
                     entries.append((pred, gcol, pgflag, tid))
 
+        c = _Join(po_present=F.col("__po").isNotNull())
         scalar = len(entries) == 1
         if scalar:
             pred, gcol, pgflag, tid = entries[0]
-            child_side = child_base.select(
+            c.child = [
                 F.col("__s").alias("s"),
                 pred.alias("__p"),
                 *([parent_subject_child.alias("__po")] if same_row else []),
                 gcol.alias("__g"),
                 *[e.alias(f"__ck{i}") for i, e in enumerate(join_exprs_child)],
-            )
+            ]
             if pgflag:
-                child_side = child_side.filter(F.col("__g").isNotNull())
+                c.child_filters.append(F.col("__g").isNotNull())
             if pom.predicate.constant is None:
                 # null predicate generation -> no triple (R2RML §11.1)
-                child_side = child_side.filter(F.col("__p").isNotNull())
+                c.child_filters.append(F.col("__p").isNotNull())
         else:
             payload = F.array(
                 *[
@@ -892,38 +1033,30 @@ class PlanExecutor:
                     for pred, gcol, pgflag, tid in entries
                 ]
             )
-            child_side = child_base.select(
+            c.child = [
                 F.col("__s").alias("s"),
                 *([parent_subject_child.alias("__po")] if same_row else []),
                 payload.alias("__poms"),
                 *[e.alias(f"__ck{i}") for i, e in enumerate(join_exprs_child)],
-            )
-        s_ttype = effective_term_type(tm.subject_map.term_map, "subject")
-        o_ttype = effective_term_type(parent_tm.subject_map.term_map, "subject")
-        if same_row:
-            joined = child_side.filter(F.col("__po").isNotNull())
-        else:
-            parent_side = parent_records.select(
-                parent_subject.alias("__po"),
-                *[e.alias(f"__pk{i}") for i, e in enumerate(join_exprs_parent)],
-            ).filter(F.col("__po").isNotNull()).dropDuplicates()
-
-            cond = None
-            for i in range(len(poms[0].join_conditions)):
-                c = F.col(f"__ck{i}") == F.col(f"__pk{i}")
-                cond = c if cond is None else (cond & c)
-
-            joined = child_side.join(parent_side, cond, "inner")
-        if not scalar:
+            ]
             # post-join variant explode: struct+filter stays in
             # whole-stage codegen (a HOF array filter would not)
-            joined = joined.withColumn("__pom", F.explode(F.col("__poms"))).filter(
-                ~(F.col("__pom.pgflag") & F.col("__pom.g").isNull())
-            )
+            c.variants = F.explode(F.col("__poms"))
+            c.variant_filters.append(~(F.col("__pom.pgflag") & F.col("__pom.g").isNull()))
             if any(p.predicate.constant is None for p in poms):
                 # null predicate generation -> no triple (R2RML §11.1)
-                joined = joined.filter(F.col("__pom.p").isNotNull())
-        return joined.select(
+                c.variant_filters.append(F.col("__pom.p").isNotNull())
+        if not same_row:
+            c.parent = [
+                parent_subject.alias("__po"),
+                *[e.alias(f"__pk{i}") for i, e in enumerate(join_exprs_parent)],
+            ]
+            for i in range(len(pom.join_conditions)):
+                cond = F.col(f"__ck{i}") == F.col(f"__pk{i}")
+                c.cond = cond if c.cond is None else (c.cond & cond)
+        s_ttype = effective_term_type(tm.subject_map.term_map, "subject")
+        o_ttype = effective_term_type(parent_tm.subject_map.term_map, "subject")
+        c.out = [
             F.col("s"),
             F.lit(s_ttype).alias("s_termtype"),
             (F.col("__p") if scalar else F.col("__pom.p")).alias("p"),
@@ -933,7 +1066,8 @@ class PlanExecutor:
             F.lit(None).cast("string").alias("o_lang"),
             (F.col("__g") if scalar else F.col("__pom.g")).alias("g"),
             (F.lit(tid) if scalar else F.col("__pom.t")).alias("target_id"),
-        )
+        ]
+        return c
 
 
 def execute_mapping(

@@ -11,6 +11,9 @@ requirement for the byte-identical export invariant, not a nicety.
 
 from __future__ import annotations
 
+import functools
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -79,8 +82,25 @@ def _graph_term(g: Column) -> Column:
     return F.when(g.startswith("_:"), g).otherwise(F.concat(F.lit("<"), g, F.lit(">")))
 
 
-def nquad_line_column(df: DataFrame) -> Column:
-    """Build the serialized N-Quads line for a triples-DataFrame row."""
+def _per_context(build):
+    """Build a data-independent Column once per SparkContext. The line
+    Columns take about 1,300 gateway round trips to build, more than the
+    rest of a write. A Column holds a reference into its context's JVM,
+    so a new context builds it afresh."""
+    built: dict = {}
+
+    @functools.wraps(build)
+    def get() -> Column:
+        sc = SparkContext._active_spark_context
+        if built.get("sc") is not sc:
+            built.update(sc=sc, col=build())
+        return built["col"]
+
+    return get
+
+
+@_per_context
+def _nquad_line() -> Column:
     s = _term(F.col("s"), F.col("s_termtype"), F.lit(None), F.lit(None))
     p = F.concat(F.lit("<"), F.col("p"), F.lit(">"))
     o = _term(F.col("o"), F.col("o_termtype"), F.col("o_datatype"), F.col("o_lang"))
@@ -91,6 +111,19 @@ def nquad_line_column(df: DataFrame) -> Column:
     ).otherwise(F.concat(base, F.lit(" .")))
 
 
+@_per_context
+def _ntriple_line() -> Column:
+    s = _term(F.col("s"), F.col("s_termtype"), F.lit(None), F.lit(None))
+    p = F.concat(F.lit("<"), F.col("p"), F.lit(">"))
+    o = _term(F.col("o"), F.col("o_termtype"), F.col("o_datatype"), F.col("o_lang"))
+    return F.concat(F.concat_ws(" ", s, p, o), F.lit(" ."))
+
+
+def nquad_line_column(df: DataFrame) -> Column:
+    """Build the serialized N-Quads line for a triples-DataFrame row."""
+    return _nquad_line()
+
+
 def triples_to_nquad_lines(df: DataFrame) -> DataFrame:
     return df.select(nquad_line_column(df).alias("line"))
 
@@ -99,10 +132,7 @@ def ntriple_line_column(df: DataFrame) -> Column:
     """N-Triples line: the quad serialization minus the graph (the
     reference's IncRML configs request formats:N-Triples,
     /root/reference/test/processors.test.ts:130,169)."""
-    s = _term(F.col("s"), F.col("s_termtype"), F.lit(None), F.lit(None))
-    p = F.concat(F.lit("<"), F.col("p"), F.lit(">"))
-    o = _term(F.col("o"), F.col("o_termtype"), F.col("o_datatype"), F.col("o_lang"))
-    return F.concat(F.concat_ws(" ", s, p, o), F.lit(" ."))
+    return _ntriple_line()
 
 
 def triples_to_ntriple_lines(df: DataFrame) -> DataFrame:

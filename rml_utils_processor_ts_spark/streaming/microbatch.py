@@ -18,17 +18,16 @@ output lands in the triple table / LDES targets via sinks.
 
 from __future__ import annotations
 
-from copy import deepcopy
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.cdc import StateStore
-from ..operators.executor import ExecutionResult
+from ..operators.executor import ExecutionResult, PlanExecutor
 from ..plans.model import MappingPlan
 from ..plans.rml_parser import parse_mapping
 from ..sources.registry import register_memory_source, unregister_memory_source
-from .snapshots import _execute_and_commit
+from .snapshots import _execute_and_commit, _with_source
 
 
 @dataclass
@@ -50,11 +49,18 @@ class MicroBatchMappingRunner:
     results: list[ExecutionResult] = field(default_factory=list)
 
     def __post_init__(self):
-        self._plan: MappingPlan = parse_mapping(self.mapping_text)
+        plan = parse_mapping(self.mapping_text)
         self._store = (
             StateStore(self.spark, self.state_root) if self.state_root else None
         )
         self._key = f"mb_{id(self)}"
+        # every batch registers under the same memory source, so the
+        # mapping binds once and its Columns compile once
+        self._plan: MappingPlan = replace(
+            plan,
+            triples_maps=[_with_source(tm, f"memory:{self._key}") for tm in plan.triples_maps],
+        )
+        self._compiled: dict = {}
 
     # -- batch markers, through the Hadoop filesystem of state_root --------
     # The replay guard must live on the SAME filesystem as the state data:
@@ -106,12 +112,14 @@ class MicroBatchMappingRunner:
             return None
         register_memory_source(self._key, batch_df)
         try:
-            bound = deepcopy(self._plan)
-            for tm in bound.triples_maps:
-                tm.logical_source.source = f"memory:{self._key}"
-            result = _execute_and_commit(
-                self.spark, bound, self._store, self.publisher_ref, self.publisher_regex
+            executor = PlanExecutor(
+                self.spark,
+                state_store=self._store,
+                publisher_ref=self.publisher_ref,
+                publisher_regex=self.publisher_regex,
+                compiled=self._compiled,
             )
+            result = _execute_and_commit(executor, self._plan)
         finally:
             # the step read the batch frame into checkpoints (the
             # stateful sources and the triples), so nothing references

@@ -19,14 +19,14 @@ from __future__ import annotations
 
 import threading
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import SparkSession
 
 from ..operators.cc import _materialize
 from ..operators.cdc import StateStore
 from ..operators.executor import ExecutionResult, PlanExecutor
-from ..plans.model import MappingPlan
+from ..plans.model import MappingPlan, TriplesMap
 from ..plans.rml_parser import parse_mapping
 
 
@@ -48,6 +48,9 @@ class SnapshotRunner:
     _buffers: dict[str, list[str]] = field(default_factory=dict)
     _current: dict[str, str] = field(default_factory=dict)
     results: list[ExecutionResult] = field(default_factory=list)
+    # per registered plan hash: the Columns its steps' executors compile
+    # (PlanExecutor ``compiled``); only the data is read at every step
+    _compiled: dict[str, dict] = field(default_factory=dict)
 
     def add_mapping(self, mapping_turtle: str) -> str:
         """Register a mapping; content-hash key dedupes re-pushed docs
@@ -60,6 +63,9 @@ class SnapshotRunner:
         plan = parse_mapping(mapping_turtle, add_prefixes=True)
         key = plan.plan_hash()
         self.plans[key] = plan
+        # plan_hash leaves out parts of a mapping (classes, term types,
+        # targets): a plan registered again compiles afresh
+        self._compiled.pop(key, None)
         self._drain()
         return key
 
@@ -102,16 +108,21 @@ class SnapshotRunner:
         bindings = {src: "inline:" + payload for src, payload in self._current.items()}
         store = StateStore(self.spark, self.state_root) if self.state_root else None
         merged: ExecutionResult | None = None
-        for plan in self.plans.values():
+        for key, plan in self.plans.items():
             bound = MappingPlan(
                 triples_maps=[
-                    _rebind_tm(tm, bindings) for tm in plan.triples_maps
+                    _with_source(tm, bindings.get(tm.logical_source.source)) for tm in plan.triples_maps
                 ],
                 source_bindings=bindings,
             )
-            result = _execute_and_commit(
-                self.spark, bound, store, self.publisher_ref, self.publisher_regex
+            executor = PlanExecutor(
+                self.spark,
+                state_store=store,
+                publisher_ref=self.publisher_ref,
+                publisher_regex=self.publisher_regex,
+                compiled=self._compiled.setdefault(key, {}),
             )
+            result = _execute_and_commit(executor, bound)
             merged = result if merged is None else ExecutionResult(
                 triples=merged.triples.unionByName(result.triples)
             )
@@ -154,41 +165,30 @@ def _same_plans_when_empty(spark: SparkSession):
                     spark.conf.set(key, value)
 
 
-def _execute_and_commit(
-    spark: SparkSession,
-    plan: MappingPlan,
-    store: StateStore | None,
-    publisher_ref: str | None,
-    publisher_regex: str | None,
-) -> ExecutionResult:
+def _execute_and_commit(executor: PlanExecutor, plan: MappingPlan) -> ExecutionResult:
     """One snapshot step, shared by both runners: execute the plan,
     materialize its triples, then commit its state updates."""
-    with _same_plans_when_empty(spark):
-        result = PlanExecutor(
-            spark,
-            state_store=store,
-            publisher_ref=publisher_ref,
-            publisher_regex=publisher_regex,
-        ).execute(plan)
+    with _same_plans_when_empty(executor.spark):
+        result = executor.execute(plan)
         # Materialize before the state commit: computed lazily after
         # commit_all, the triples could read the state this step just
         # wrote (a table-backed backend resolves its current snapshot
         # when a query runs), so a step's output would observe its own
-        # state update. Neither the triples nor the state updates
-        # re-iterate a stateful source: both read the checkpoint
-        # execute() made of it. Executor-side checkpoint (never a driver
-        # collect — a table-backed source would pull the whole triple
-        # set through the driver).
+        # state update. The triples read only the two checkpoints
+        # execute() made, of the stateful sources' records and of the
+        # classification against state, so they neither re-iterate a
+        # source nor re-join the state. Executor-side checkpoint (never
+        # a driver collect — a table-backed source would pull the whole
+        # triple set through the driver).
         result.triples = _materialize(result.triples)
-        if store is not None:
-            store.commit_all(result.state_updates)
+        if executor.state_store is not None:
+            executor.state_store.commit_all(result.state_updates)
     return result
 
 
-def _rebind_tm(tm, bindings: dict[str, str]):
-    from copy import deepcopy
-
-    out = deepcopy(tm)
-    if out.logical_source.source in bindings:
-        out.logical_source.source = bindings[out.logical_source.source]
-    return out
+def _with_source(tm: TriplesMap, source: str | None) -> TriplesMap:
+    """``tm`` reading ``source`` (unchanged when None); shares every
+    other part with ``tm``, which no step mutates."""
+    if source is None:
+        return tm
+    return replace(tm, logical_source=replace(tm.logical_source, source=source))

@@ -5,6 +5,7 @@ stateful mapping assert per-run Create/Update/Delete events."""
 import hashlib
 import os
 import re
+from pathlib import Path
 
 import pytest
 from fixtures import RML_BASIC, RML_STATEFUL, XML_DOC, XML_DOC_V2, XML_DOC_V3_DROPPED
@@ -306,6 +307,8 @@ def test_commit_fault_leaves_every_table_at_previous_version(spark, tmp_path, mo
     _, expected = run_snapshot(spark, clean, XML_DOC_V3_DROPPED)
     assert replayed == expected == {"Update": {EX + "001"}, "Delete": {EX + "002"}}
     assert _state_rows(faulty) == _state_rows(clean)
+    # the replay rewrote the orphaned v_2 and removed the superseded v_1
+    assert _versions_dirs(tmp_path / "faulty") == ({"v_2"}, {"v_2"})
 
 
 def test_state_store_refuses_per_table_layout(spark, tmp_path):
@@ -478,3 +481,180 @@ def test_steady_snapshot_job_budget(spark, tmp_path, monkeypatch):
     assert events == {"Update": 64, "Delete": 10}
     assert commit_jobs == 1
     assert jobs + commit_jobs <= 12, (jobs, commit_jobs)
+
+
+def _steady_doc(version, n=200):
+    """The 200-record document of the budget tests: version 2 drops the
+    last 10 records, and every third label changes with the version."""
+    kept = n - 10 if version == 2 else n
+    return "<resource>" + "".join(
+        f'<data id="{i:03d}" label="l{i}-{version if i % 3 == 0 else 0}"></data>'
+        for i in range(kept)
+    ) + "</resource>"
+
+
+def test_steady_snapshot_gateway_budget(spark, tmp_path, monkeypatch):
+    """Driver round trips of one steady snapshot: the third push of
+    test_steady_snapshot_job_budget, then its N-Quads write, counted at
+    the py4j connection with Python's gc off. The push sent about 6,700
+    commands and the write about 1,420. Turning off PySpark's per-call
+    origin capture took them to about 3,400 and 1,000; building the
+    N-Quads line Column once per context took the write to about 70,
+    and compiling the mapping's term maps, quad structs and CDC
+    fingerprints once per runner, not at every push, took the push to
+    about 930."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    from rml_utils_processor_ts_spark.sinks import write_targets
+    from rml_utils_processor_ts_spark.streaming.snapshots import SnapshotRunner
+
+    runner = SnapshotRunner(spark, state_root=str(tmp_path / "state"))
+    plan = runner.plans[runner.add_mapping(RML_STATEFUL.format(source="dataset/data.xml"))]
+    for version in (0, 1):
+        (result,) = runner.push_snapshot("dataset/data.xml", _steady_doc(version))
+        write_targets(result, plan, str(tmp_path / f"out{version}"))
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        sent[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    gc.disable()
+    try:
+        (result,) = runner.push_snapshot("dataset/data.xml", _steady_doc(2))
+        push, sent[0] = sent[0], 0
+        written = write_targets(result, plan, str(tmp_path / "out"))
+        write = sent[0]
+    finally:
+        gc.enable()
+        monkeypatch.undo()
+    assert list(written) == ["default"]
+    assert sum(LIFECYCLE in ln for ln in _part_lines(written["default"])) == 64 + 10
+    assert push <= 1500, push
+    assert write <= 150, write
+
+
+def _part_lines(path) -> list[str]:
+    return [
+        ln
+        for name in sorted(os.listdir(path))
+        if name.startswith("part-")
+        for ln in (Path(path) / name).read_text(encoding="utf-8").splitlines()
+    ]
+
+
+def _versions():
+    """Five versions of a 30-record document: records appear, change
+    their label and disappear between versions."""
+    for v in range(5):
+        ids = [i for i in range(3 * v, 24 + 2 * v) if (i + v) % 7]
+        yield "<resource>" + "".join(
+            f'<data id="{i:03d}" label="l{i}-{v if i % 3 == v % 3 else 0}"></data>' for i in ids
+        ) + "</resource>"
+
+
+def _nquads(df, path) -> list[str]:
+    from rml_utils_processor_ts_spark.sinks import write_nquads
+
+    write_nquads(df, str(path))
+    return _part_lines(path)
+
+
+def test_snapshot_runner_matches_fresh_executor_per_step(spark, tmp_path):
+    """A runner compiles its mapping's Columns once and reuses them at
+    every push. Over five versions with creates, updates and deletes,
+    its N-Quads and committed state equal those of the same steps run
+    with a fresh PlanExecutor each."""
+    from rml_utils_processor_ts_spark.streaming.snapshots import SnapshotRunner, _execute_and_commit
+
+    mapping = RML_STATEFUL.format(source="dataset/data.xml")
+    runner = SnapshotRunner(spark, state_root=str(tmp_path / "runner"))
+    runner.add_mapping(mapping)
+    fresh = StateStore(spark, str(tmp_path / "fresh"))
+    kinds = set()
+    for v, doc in enumerate(_versions()):
+        (got,) = runner.push_snapshot("dataset/data.xml", doc)
+        plan = parse_mapping(mapping, {"dataset/data.xml": "inline:" + doc})
+        want = _execute_and_commit(PlanExecutor(spark, state_store=fresh), plan)
+        lines = _nquads(got.triples, tmp_path / f"got{v}")
+        assert lines == _nquads(want.triples, tmp_path / f"want{v}")
+        assert _state_rows(StateStore(spark, str(tmp_path / "runner"))) == _state_rows(fresh)
+        kinds |= {ln.rsplit("#", 1)[-1].split(">")[0] for ln in lines if LIFECYCLE in ln}
+    assert kinds == {"Create", "Update", "Delete"}
+
+
+def test_microbatch_runner_matches_fresh_runner_per_batch(spark, tmp_path):
+    """process_batch reuses the Columns it compiled for the first batch
+    (the second compiles nothing), and its output and state equal a
+    fresh runner's per batch."""
+    from rml_utils_processor_ts_spark.streaming.microbatch import MicroBatchMappingRunner
+
+    mapping = RML_STATEFUL.format(source="dataset/data.xml")
+    runner = MicroBatchMappingRunner(spark, mapping, state_root=str(tmp_path / "runner"))
+    compiled = []
+    for batch_id, doc in enumerate(list(_versions())[:2]):
+        frame = spark.createDataFrame([(doc,)], "doc string")
+        got = runner.process_batch(frame, batch_id)
+        compiled.append(len(runner._compiled))
+        want = MicroBatchMappingRunner(spark, mapping, state_root=str(tmp_path / "fresh")).process_batch(
+            frame, batch_id
+        )
+        assert _nquads(got.triples, tmp_path / f"got{batch_id}") == _nquads(
+            want.triples, tmp_path / f"want{batch_id}"
+        )
+        assert _state_rows(StateStore(spark, str(tmp_path / "runner"))) == _state_rows(
+            StateStore(spark, str(tmp_path / "fresh"))
+        )
+    assert compiled[0] > 0 and compiled[1] == compiled[0]
+
+
+def _versions_dirs(root) -> tuple[set[str], set[str]]:
+    """(v_N directories under root, those the manifest points into)."""
+    import json
+
+    present = {name for name in os.listdir(root) if name.startswith("v_")}
+    tables = json.loads((Path(root) / "LATEST").read_text())["tables"]
+    return present, {part.split("/")[0] for part in tables.values() if part}
+
+
+def test_state_root_keeps_only_referenced_versions(spark, tmp_path):
+    """Each commit writes a new version; superseded ones are removed
+    once the manifest moves, so after 8 pushes the root holds only the
+    versions the manifest points into."""
+    from rml_utils_processor_ts_spark.streaming.snapshots import SnapshotRunner
+
+    root = tmp_path / "state"
+    runner = SnapshotRunner(spark, state_root=str(root))
+    runner.add_mapping(RML_STATEFUL.format(source="dataset/data.xml"))
+    for v in range(8):
+        runner.push_snapshot("dataset/data.xml", _steady_doc(v % 3, n=20))
+    present, live = _versions_dirs(root)
+    assert present == live == {"v_8"}
+
+
+def test_cleanup_crash_leaves_only_unreferenced_versions(spark, tmp_path, monkeypatch):
+    """A commit that dies while removing old versions has already moved
+    the manifest: the state reads as committed, and the next commit
+    removes what the crash left."""
+    import shutil
+
+    store = StateStore(spark, str(tmp_path / "st"))
+    run_snapshot(spark, store, XML_DOC)
+
+    def killed(path, *args, **kwargs):
+        raise OSError("killed during cleanup")
+
+    monkeypatch.setattr(shutil, "rmtree", killed)
+    with pytest.raises(OSError, match="cleanup"):
+        run_snapshot(spark, store, XML_DOC_V2)
+    monkeypatch.undo()
+    present, live = _versions_dirs(tmp_path / "st")
+    assert present == {"v_1", "v_2"} and live == {"v_2"}
+    assert {r["iri"] for r in store.read("/tmp/update_state").collect()} == {EX + "001", EX + "002"}
+    _, events = run_snapshot(spark, store, XML_DOC_V3_DROPPED)
+    assert events == {"Delete": {EX + "002"}}
+    assert _versions_dirs(tmp_path / "st") == ({"v_3"}, {"v_3"})

@@ -164,3 +164,46 @@ ex:m a rr:TriplesMap ;
     members = {r["o"] for r in rows if r["p"] == "https://w3id.org/tree#member"}
     assert members == {"http://ex.org/event/1#2024-01-01T00:00:00Z"}
 
+
+
+def test_single_target_plan_lists_its_target_without_a_distinct(spark, tmp_path):
+    """A plan whose quads can reach one target only lists it with an
+    emptiness probe instead of a distinct collect over the triples, and
+    an empty result lists none, so write_targets writes nothing. A plan
+    that can reach two targets still lists the ones its triples hold."""
+    from rml_utils_processor_ts_spark.operators.cc import _materialize
+    from rml_utils_processor_ts_spark.plans.rml_parser import parse_mapping
+    from rml_utils_processor_ts_spark.sinks import write_targets
+
+    sc = spark.sparkContext
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+            sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    bindings = {"d.csv": "inline:id,name\n1,a\n2,b\n"}
+    one = execute_mapping(spark, _SRC + _PLAIN_TM, bindings)
+    one.triples = _materialize(one.triples)
+    assert one.reachable_targets == {"default"}
+    listed, probe_jobs = jobs("single_target_probe", one.target_ids)
+    collected, collect_jobs = jobs(
+        "single_target_collect",
+        lambda: [r[0] for r in one.triples.select("target_id").distinct().collect()],
+    )
+    assert listed == collected == ["default"]
+    assert probe_jobs < collect_jobs, (probe_jobs, collect_jobs)
+
+    empty = execute_mapping(spark, _SRC + _PLAIN_TM, {"d.csv": "inline:id,name\n"})
+    assert empty.target_ids() == []
+    plan = parse_mapping(_SRC + _PLAIN_TM)
+    assert write_targets(empty, plan, str(tmp_path / "empty")) == {}
+    assert not (tmp_path / "empty").exists()
+
+    two = execute_mapping(spark, _SRC + _PLAIN_TM + _LDES_TM, bindings, version_ts="2024-01-01T00:00:00Z")
+    assert len(two.reachable_targets) == 2
+    assert sorted(two.target_ids()) == sorted({r["target_id"] for r in two.triples.collect()})

@@ -47,3 +47,28 @@ def test_get_spark_starts_no_jobs(spark, monkeypatch):
         assert len(sc.statusTracker().getJobIdsForGroup(group)) > 0
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_dataframe_debugging_is_off(spark):
+    """PySpark's per-call origin capture costs gateway round trips on
+    every DataFrame and Column call; the session turns it off."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_missing_reference_still_names_the_column(spark):
+    """With the origin capture off, a mapping that references a column
+    its source lacks still fails loudly, naming the reference."""
+    import pytest
+
+    from rml_utils_processor_ts_spark.operators.executor import _resolver, execute_mapping
+
+    with pytest.raises(ValueError, match="'nmae'.*missing column"):
+        _resolver({"id"})("nmae")
+    mapping = """
+ex:m a rr:TriplesMap ;
+  rml:logicalSource [ rml:source "d.csv" ; rml:referenceFormulation ql:CSV ] ;
+  rr:subjectMap [ rr:template "http://ex.org/{id}" ] ;
+  rr:predicateObjectMap [ rr:predicate ex:name ; rr:objectMap [ rml:reference "nmae" ] ] .
+"""
+    with pytest.raises(ValueError, match="'nmae'"):
+        execute_mapping(spark, mapping, {"d.csv": "inline:id,name\n1,a\n"})

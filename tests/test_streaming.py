@@ -5,6 +5,8 @@ Streaming windowed aggregation cross-checked against its batch twin."""
 
 from fixtures import RML_BASIC, XML_DOC, XML_DOC_V2
 
+from rml_utils_processor_ts_spark.plans import voc
+from rml_utils_processor_ts_spark.plans.rml_parser import parse_mapping
 from rml_utils_processor_ts_spark.streaming.snapshots import SnapshotRunner
 
 EX = "http://example.org/"
@@ -380,3 +382,81 @@ def test_kafka_records_stage_checkpoint_recovery(spark, tmp_path):
         for r in records(spark.read.parquet(str(src))).collect()
     )
     assert got == oracle and len(got) == 5
+
+
+_CSV_SRC = """
+ex:src a rml:LogicalSource ; rml:source "d.csv" ; rml:referenceFormulation ql:CSV .
+"""
+
+_PLAIN_CSV = _CSV_SRC + """
+ex:plain a rr:TriplesMap ;
+  rml:logicalSource ex:src ;
+  rr:subjectMap [ rr:template "http://ex.org/p/{id}" ] ;
+  rr:predicateObjectMap [ rr:predicate ex:label ; rr:objectMap [ rml:reference "name" ] ] .
+"""
+
+_NAMED_CSV = _PLAIN_CSV.replace("ex:plain", "ex:named").replace("ex:label", "ex:name")
+
+_LDES_XML = """
+ex:versioned a rr:TriplesMap ;
+  rml:logicalSource [ rml:source "d.xml" ; rml:iterator "//data" ; rml:referenceFormulation ql:XPath ] ;
+  rr:subjectMap [ rr:template "http://ex.org/v/{@id}" ;
+      rml:logicalTarget [ a rmlt:EventStreamTarget ;
+          rmlt:ldesBaseIRI <http://ex.org/stream> ;
+          rmlt:ldesGenerateImmutableIRI "true"^^xsd:boolean ] ] ;
+  rr:predicateObjectMap [ rr:predicate ex:name ; rr:objectMap [ rml:reference "@label" ] ] .
+"""
+
+
+def _quads(*results):
+    # without the target id: an LDES target's id is a blank-node label,
+    # fresh per parse
+    return {tuple(r)[:-1] for res in results for r in res.triples.collect()}
+
+
+def test_runner_compiles_afresh_for_a_new_mapping(spark):
+    """A runner keeps compiled Columns per registered mapping: a second
+    mapping compiles its own, and a mapping registered again under the
+    same plan hash (plan_hash leaves out rr:class) replaces the old
+    one's. Every push equals execute_mapping on the same input."""
+    from rml_utils_processor_ts_spark.operators.executor import execute_mapping
+
+    def expected(csv, *mappings):
+        return _quads(*[execute_mapping(spark, m, {"d.csv": "inline:" + csv}) for m in mappings])
+
+    v1, v2 = "id,name\n1,a\n2,b\n", "id,name\n1,a\n2,c\n"
+    runner = SnapshotRunner(spark)
+    runner.add_mapping(_PLAIN_CSV)
+    (got,) = runner.push_snapshot("d.csv", v1)
+    assert _quads(got) == expected(v1, _PLAIN_CSV)
+    runner.add_mapping(_NAMED_CSV)
+    (got,) = runner.push_snapshot("d.csv", v2)
+    assert _quads(got) == expected(v2, _PLAIN_CSV, _NAMED_CSV)
+    typed = _PLAIN_CSV.replace("rr:template", "rr:class ex:Other ; rr:template")
+    assert parse_mapping(typed).plan_hash() == parse_mapping(_PLAIN_CSV).plan_hash()
+    runner.add_mapping(typed)
+    (got,) = runner.push_snapshot("d.csv", v1)
+    assert _quads(got) == expected(v1, typed, _NAMED_CSV)
+    assert ("http://ex.org/p/1", "IRI", voc.RDF_TYPE, EX + "Other") in {q[:4] for q in _quads(got)}
+
+
+def test_microbatch_compiles_afresh_for_other_record_columns(spark):
+    """A batch frame that brings a warc_ts column gives its records one
+    more column, so the runner compiles afresh and takes the LDES
+    version timestamps from it; the batches without one take the
+    default. Each batch equals a fresh runner's output."""
+    import datetime
+
+    from rml_utils_processor_ts_spark.streaming.microbatch import MicroBatchMappingRunner
+
+    doc = '<r><data id="1" label="a"/><data id="2" label="b"/></r>'
+    plain = spark.createDataFrame([(doc,)], "doc string")
+    stamped = spark.createDataFrame([(doc, datetime.datetime(2024, 2, 1, 10))], "doc string, warc_ts timestamp")
+    runner = MicroBatchMappingRunner(spark, _LDES_XML)
+    subjects = []
+    for batch_id, frame in enumerate((plain, stamped, plain)):
+        got = runner.process_batch(frame, batch_id)
+        assert _quads(got) == _quads(MicroBatchMappingRunner(spark, _LDES_XML).process_batch(frame, 0))
+        subjects.append({q[0] for q in _quads(got)})
+    assert "http://ex.org/v/2#1970-01-01T00:00:00Z" in subjects[0] & subjects[2]
+    assert "http://ex.org/v/2#2024-02-01T10:00:00Z" in subjects[1]

@@ -76,8 +76,8 @@ class ExecutionResult:
 
     def target_ids(self) -> list[str]:
         """The target ids present in ``triples``. A plan that can reach
-        one target only needs no distinct collect (2 jobs), just an
-        emptiness probe (1 job)."""
+        one target only needs no distinct collect over the triples, just
+        an emptiness probe."""
         if self.reachable_targets is not None and len(self.reachable_targets) == 1:
             return [] if self.triples.isEmpty() else list(self.reachable_targets)
         return [r[0] for r in self.triples.select("target_id").distinct().collect()]

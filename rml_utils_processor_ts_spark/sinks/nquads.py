@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import functools
 
-from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -82,25 +81,11 @@ def _graph_term(g: Column) -> Column:
     return F.when(g.startswith("_:"), g).otherwise(F.concat(F.lit("<"), g, F.lit(">")))
 
 
-def _per_context(build):
-    """Build a data-independent Column once per SparkContext. The line
-    Columns take about 1,300 gateway round trips to build, more than the
-    rest of a write. A Column holds a reference into its context's JVM,
-    so a new context builds it afresh."""
-    built: dict = {}
-
-    @functools.wraps(build)
-    def get() -> Column:
-        sc = SparkContext._active_spark_context
-        if built.get("sc") is not sc:
-            built.update(sc=sc, col=build())
-        return built["col"]
-
-    return get
-
-
-@_per_context
-def _nquad_line() -> Column:
+# The line Columns take about a thousand gateway round trips to build,
+# more than the rest of a write, so each is built once per SparkContext
+# (the cache key): a Column holds a reference into its context's JVM.
+@functools.lru_cache(maxsize=1)
+def _nquad_line(sc) -> Column:
     s = _term(F.col("s"), F.col("s_termtype"), F.lit(None), F.lit(None))
     p = F.concat(F.lit("<"), F.col("p"), F.lit(">"))
     o = _term(F.col("o"), F.col("o_termtype"), F.col("o_datatype"), F.col("o_lang"))
@@ -111,8 +96,8 @@ def _nquad_line() -> Column:
     ).otherwise(F.concat(base, F.lit(" .")))
 
 
-@_per_context
-def _ntriple_line() -> Column:
+@functools.lru_cache(maxsize=1)
+def _ntriple_line(sc) -> Column:
     s = _term(F.col("s"), F.col("s_termtype"), F.lit(None), F.lit(None))
     p = F.concat(F.lit("<"), F.col("p"), F.lit(">"))
     o = _term(F.col("o"), F.col("o_termtype"), F.col("o_datatype"), F.col("o_lang"))
@@ -121,7 +106,7 @@ def _ntriple_line() -> Column:
 
 def nquad_line_column(df: DataFrame) -> Column:
     """Build the serialized N-Quads line for a triples-DataFrame row."""
-    return _nquad_line()
+    return _nquad_line(df.sparkSession.sparkContext)
 
 
 def triples_to_nquad_lines(df: DataFrame) -> DataFrame:
@@ -132,7 +117,7 @@ def ntriple_line_column(df: DataFrame) -> Column:
     """N-Triples line: the quad serialization minus the graph (the
     reference's IncRML configs request formats:N-Triples,
     /root/reference/test/processors.test.ts:130,169)."""
-    return _ntriple_line()
+    return _ntriple_line(df.sparkSession.sparkContext)
 
 
 def triples_to_ntriple_lines(df: DataFrame) -> DataFrame:

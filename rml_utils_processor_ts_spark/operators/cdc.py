@@ -183,9 +183,6 @@ class StateStore(StateBackend):
         # footer-reading job schema inference would start
         return self.spark.read.schema(STATE_SCHEMA).parquet(os.path.join(self.root, part))
 
-    def commit(self, state_id: str, df: DataFrame) -> int:
-        return self.commit_all({state_id: df})[state_id]
-
     def commit_all(self, updates: dict[str, DataFrame]) -> dict[str, int]:
         if not updates:
             return {}

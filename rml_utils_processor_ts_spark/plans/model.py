@@ -270,9 +270,12 @@ class MappingPlan:
     source_bindings: dict[str, str] = field(default_factory=dict)
 
     def plan_hash(self) -> str:
-        """Content hash for plan caching — the Spark analog of the
-        reference's md5-of-content mapping registry
-        (/root/reference/src/rml/rml.ts:97-101)."""
+        """Structural fingerprint of the plan, used by the round-trip
+        tests (parse -> serialize -> re-parse must hash equal). Not a
+        cache or registry key: it covers names, term-map expressions,
+        logical sources, graphs, language/datatype and parent TriplesMap
+        names, and leaves out ``rr:class``, term types, logical targets
+        and join conditions, so plans differing only there hash equal."""
         parts = []
         for tm in sorted(self.triples_maps, key=lambda t: t.name):
             parts.append(tm.name)

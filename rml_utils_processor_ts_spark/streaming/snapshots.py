@@ -17,6 +17,7 @@ On a cluster the snapshot sequence is the Iceberg commit log
 
 from __future__ import annotations
 
+import hashlib
 import threading
 from contextlib import contextmanager
 from dataclasses import dataclass, field, replace
@@ -48,24 +49,23 @@ class SnapshotRunner:
     _buffers: dict[str, list[str]] = field(default_factory=dict)
     _current: dict[str, str] = field(default_factory=dict)
     results: list[ExecutionResult] = field(default_factory=list)
-    # per registered plan hash: the Columns its steps' executors compile
-    # (PlanExecutor ``compiled``); only the data is read at every step
+    # per registered mapping key: the Columns its steps' executors
+    # compile (PlanExecutor ``compiled``); only the data is read at
+    # every step
     _compiled: dict[str, dict] = field(default_factory=dict)
 
     def add_mapping(self, mapping_turtle: str) -> str:
-        """Register a mapping; content-hash key dedupes re-pushed docs
-        (the md5 registry analog, rml.ts:97-101). Registering also
-        drains: data may arrive BEFORE the mapping (the reference's
+        """Register a mapping under the sha256 of its text, so a re-pushed
+        document is registered once and any other text is a mapping of
+        its own (the md5-of-content registry, rml.ts:97-101). Registering
+        also drains: data may arrive BEFORE the mapping (the reference's
         'data input arriving before mappings' scenario,
-        /root/reference/test/rml.test.ts:515-574, where the mapping
-        stream's end triggers execution over already-buffered
-        snapshots) — runs land in ``self.results``."""
-        plan = parse_mapping(mapping_turtle, add_prefixes=True)
-        key = plan.plan_hash()
-        self.plans[key] = plan
-        # plan_hash leaves out parts of a mapping (classes, term types,
-        # targets): a plan registered again compiles afresh
-        self._compiled.pop(key, None)
+        test/rml.test.ts:515-574, where the mapping stream's end
+        triggers execution over already-buffered snapshots) — runs land
+        in ``self.results``."""
+        key = hashlib.sha256(mapping_turtle.encode()).hexdigest()
+        if key not in self.plans:
+            self.plans[key] = parse_mapping(mapping_turtle, add_prefixes=True)
         self._drain()
         return key
 

@@ -89,7 +89,7 @@ def test_committed_parquet_state_read_starts_no_job(spark, tmp_path):
     infers it."""
     store = StateStore(spark, str(tmp_path / "state"))
     rows = [("http://ex.org/1", "p", "h1"), ("http://ex.org/2", None, "h2")]
-    store.commit("s", spark.createDataFrame(rows, STATE_SCHEMA))
+    store.commit_all({"s": spark.createDataFrame(rows, STATE_SCHEMA)})
     sc = spark.sparkContext
     group = "test_committed_parquet_state_read_starts_no_job"
     sc.setJobGroup(group, group)
@@ -105,9 +105,8 @@ def test_committed_parquet_state_read_starts_no_job(spark, tmp_path):
 def test_in_memory_state_is_local_relation(spark):
     store = InMemoryStateStore(spark)
     assert_local(store.read("s"))
-    store.commit("s", spark.createDataFrame([("http://ex.org/1", "p", "h")], STATE_SCHEMA))
+    store.commit_all({"s": spark.createDataFrame([("http://ex.org/1", "p", "h")], STATE_SCHEMA)})
     assert_local(store.read("s"))
-    assert_local(store.read_version("s", 1))
 
 
 def test_in_memory_state_round_trips_committed_schema(spark):
@@ -117,7 +116,7 @@ def test_in_memory_state_round_trips_committed_schema(spark):
     store = InMemoryStateStore(spark)
     rows = [("h1", 7, "http://ex.org/1", None), (None, None, "http://ex.org/2", "p")]
     committed = spark.createDataFrame(rows, "watched_hash string, n bigint, iri string, publisher string")
-    store.commit("s", committed)
+    store.commit_all({"s": committed})
     got = store.read("s")
     assert_local(got)
     assert got.schema == committed.schema

@@ -72,7 +72,7 @@ def test_state_store_versions_survive_and_time_travel(spark, tmp_path):
     store = StateStore(spark, str(tmp_path / "st"))
     s1 = spark.createDataFrame([("a", "", "1")], "iri string, publisher string, watched_hash string")
     s2 = spark.createDataFrame([("a", "", "2")], "iri string, publisher string, watched_hash string")
-    assert store.commit("x", s1) == 1
-    assert store.commit("x", s2) == 2
+    assert store.commit_all({"x": s1}) == {"x": 1}
+    assert store.commit_all({"x": s2}) == {"x": 2}
     latest = store.read("x").collect()
     assert latest[0]["watched_hash"] == "2"

@@ -3,10 +3,11 @@
 multiple buffered updates replayed FIFO. Plus a real Structured
 Streaming windowed aggregation cross-checked against its batch twin."""
 
+from collections import Counter
+
 from fixtures import RML_BASIC, XML_DOC, XML_DOC_V2
 
 from rml_utils_processor_ts_spark.plans import voc
-from rml_utils_processor_ts_spark.plans.rml_parser import parse_mapping
 from rml_utils_processor_ts_spark.streaming.snapshots import SnapshotRunner
 
 EX = "http://example.org/"
@@ -86,48 +87,6 @@ def test_structured_streaming_matches_batch(spark, tmp_path):
     b = {tuple(r) for r in batch.collect()}
     s = {tuple(r) for r in stream.collect()}
     assert b == s and len(b) > 0
-
-
-def test_streaming_cdc_applyinpandaswithstate(spark, tmp_path):
-    """Custom stateful streaming operator (B11 streaming alternative):
-    three micro-batches drive create -> update -> delete for one entity
-    while an unchanged entity stays silent after its create."""
-    import json
-    import os
-
-    from rml_utils_processor_ts_spark.streaming.stateful import OUTPUT_SCHEMA, streaming_cdc
-
-    src = tmp_path / "cdc_src"
-    os.makedirs(src)
-    schema = "iri string, watched_hash string, present boolean, seq long"
-
-    def write_batch(i, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(str(src))
-
-    # batch 1 only initially; later files arrive while the stream runs
-    write_batch(0, [("e1", "h1", True, 0), ("e2", "h1", True, 1)])
-
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(str(src))
-    q = (
-        streaming_cdc(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("cdc_stream")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        write_batch(1, [("e1", "h2", True, 2), ("e2", "h1", True, 3)])
-        q.processAllAvailable()
-        write_batch(2, [("e1", "h2", False, 4)])
-        q.processAllAvailable()
-        rows = {(r["iri"], r["lifecycle"]) for r in spark.sql("SELECT * FROM cdc_stream").collect()}
-    finally:
-        q.stop()
-    assert ("e1", "create") in rows and ("e2", "create") in rows
-    assert ("e1", "update") in rows
-    assert ("e1", "delete") in rows
-    assert ("e2", "update") not in rows and ("e2", "delete") not in rows
 
 
 def test_microbatch_rml_stream_cdc_sequence(spark, tmp_path):
@@ -397,6 +356,8 @@ ex:plain a rr:TriplesMap ;
 
 _NAMED_CSV = _PLAIN_CSV.replace("ex:plain", "ex:named").replace("ex:label", "ex:name")
 
+_TYPED_CSV = _PLAIN_CSV.replace("rr:template", "rr:class ex:Other ; rr:template")
+
 _LDES_XML = """
 ex:versioned a rr:TriplesMap ;
   rml:logicalSource [ rml:source "d.xml" ; rml:iterator "//data" ; rml:referenceFormulation ql:XPath ] ;
@@ -416,9 +377,9 @@ def _quads(*results):
 
 def test_runner_compiles_afresh_for_a_new_mapping(spark):
     """A runner keeps compiled Columns per registered mapping: a second
-    mapping compiles its own, and a mapping registered again under the
-    same plan hash (plan_hash leaves out rr:class) replaces the old
-    one's. Every push equals execute_mapping on the same input."""
+    mapping compiles its own, and a mapping that differs from a
+    registered one only in rr:class runs beside it. Every push equals
+    execute_mapping on the same input."""
     from rml_utils_processor_ts_spark.operators.executor import execute_mapping
 
     def expected(csv, *mappings):
@@ -432,12 +393,30 @@ def test_runner_compiles_afresh_for_a_new_mapping(spark):
     runner.add_mapping(_NAMED_CSV)
     (got,) = runner.push_snapshot("d.csv", v2)
     assert _quads(got) == expected(v2, _PLAIN_CSV, _NAMED_CSV)
-    typed = _PLAIN_CSV.replace("rr:template", "rr:class ex:Other ; rr:template")
-    assert parse_mapping(typed).plan_hash() == parse_mapping(_PLAIN_CSV).plan_hash()
-    runner.add_mapping(typed)
+    runner.add_mapping(_TYPED_CSV)
     (got,) = runner.push_snapshot("d.csv", v1)
-    assert _quads(got) == expected(v1, typed, _NAMED_CSV)
+    assert _quads(got) == expected(v1, _PLAIN_CSV, _NAMED_CSV, _TYPED_CSV)
     assert ("http://ex.org/p/1", "IRI", voc.RDF_TYPE, EX + "Other") in {q[:4] for q in _quads(got)}
+
+
+def test_runner_registers_each_mapping_text_once(spark):
+    """The registry is keyed by the mapping text: two mappings that
+    differ only in rr:class both execute, and the same text registered
+    again executes once."""
+    runner = SnapshotRunner(spark)
+    plain = runner.add_mapping(_PLAIN_CSV)
+    typed = runner.add_mapping(_TYPED_CSV)
+    assert plain != typed
+    assert runner.add_mapping(_PLAIN_CSV) == plain
+    assert sorted(runner.plans) == sorted([plain, typed])
+    (got,) = runner.push_snapshot("d.csv", "id,name\n1,a\n2,b\n")
+    counts = Counter(tuple(r)[:4] for r in got.triples.collect())
+    for i, name in (("1", "a"), ("2", "b")):
+        s = "http://ex.org/p/" + i
+        # the label from each of the two mappings, the class from the typed one
+        assert counts[(s, "IRI", EX + "label", name)] == 2
+        assert counts[(s, "IRI", voc.RDF_TYPE, EX + "Other")] == 1
+    assert sum(counts.values()) == 6
 
 
 def test_microbatch_compiles_afresh_for_other_record_columns(spark):

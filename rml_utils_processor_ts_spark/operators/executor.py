@@ -373,7 +373,6 @@ class PlanExecutor:
         dedupe: bool = True,
         ldes_ts_col: str = "warc_ts",
         on_missing_source: str = "raise",
-        validate_iris: bool = True,
         compiled: dict | None = None,
     ):
         self.spark = spark
@@ -398,13 +397,6 @@ class PlanExecutor:
         if on_missing_source not in ("raise", "skip"):
             raise ValueError(f"on_missing_source must be 'raise' or 'skip', got {on_missing_source!r}")
         self.on_missing_source = on_missing_source
-        # R2RML/RML data-error semantics (official test cases RMLTC0002e
-        # family): a term map with rr:termType rr:IRI whose value is not
-        # a valid absolute IRI produces NO triple (the row drops, the
-        # run continues). Templates are IRI-safe by construction; this
-        # catches rml:reference-sourced and relative IRIs. Two rlikes
-        # per IRI column, pure codegen.
-        self.validate_iris = validate_iris
         # Columns compiled from the mapping (see _compiled), keyed by
         # TriplesMap names, role and records column names. A runner that
         # executes one mapping at every step passes the same dict to each
@@ -590,12 +582,17 @@ class PlanExecutor:
         triples = frames[0]
         for f in frames[1:]:
             triples = triples.unionByName(f)
-        if self.validate_iris:
-            check_positions = frozenset(_plan_iri_check_positions(plan))
-            if check_positions:
-                triples = triples.filter(
-                    self._compiled(("iri check", check_positions), lambda: _valid_iri_quad(check_positions))
-                )
+        # R2RML/RML data-error semantics (official test cases RMLTC0002e
+        # family): a term map with rr:termType rr:IRI whose value is not
+        # a valid absolute IRI produces NO triple (the row drops, the
+        # run continues). Templates are IRI-safe by construction; this
+        # catches rml:reference-sourced and relative IRIs. Two rlikes
+        # per IRI column, pure codegen.
+        check_positions = frozenset(_plan_iri_check_positions(plan))
+        if check_positions:
+            triples = triples.filter(
+                self._compiled(("iri check", check_positions), lambda: _valid_iri_quad(check_positions))
+            )
         if self.dedupe:
             # RDF graphs are sets (B12): duplicate quads collapse.
             triples = triples.dropDuplicates(TRIPLE_COLUMNS)

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
+import shutil
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,22 +77,10 @@ def run_pipeline(
     out_path: str,
     run_id: str,
     alias_dict: DataFrame | None = None,
-    verify_invariant: bool = True,
-    stage_before_link: bool = True,
 ) -> dict:
     """Execute the full pipeline for one snapshot; returns the lineage
     summary. Safe to re-invoke after a kill: committed run ids short-
-    circuit, partial snapshots are invisible until the pointer moves.
-
-    ``stage_before_link``: with linking enabled, the extracted triples
-    are STAGED to parquet once and both the edge derivation and the
-    final rewrite read the staged table — without it, the lazy triple
-    frame re-runs the whole page-extraction pass for the CC edge
-    derivation AND again for the materialize (measured 2 full passes
-    at 6.4M pages). One compressed-parquet write is far cheaper than a
-    second extraction pass at any scale where the html/text payload
-    dominates; the staging dir lives beside the snapshot and is
-    removed after the commit."""
+    circuit, partial snapshots are invisible until the pointer moves."""
     if run_id in completed_runs(spark, out_path):
         return {"run_id": run_id, "skipped": True, "reason": "already committed"}
 
@@ -103,8 +93,7 @@ def run_pipeline(
     # rule: "source url range") — one min/max agg over the pruned url
     # column, negligible next to the mapping pass
     rng = pages.agg(F.min("url").alias("lo"), F.max("url").alias("hi")).first()
-    if verify_invariant:
-        verify_extraction(pages, sample_fraction=0.05 if pages.rdd.getNumPartitions() > 8 else None)
+    verify_extraction(pages, sample_fraction=0.05 if pages.rdd.getNumPartitions() > 8 else None)
     metrics["verify_sec"] = round(_time.time() - t, 3)
 
     t = _time.time()
@@ -115,16 +104,21 @@ def run_pipeline(
 
     staging_dir = None
     if alias_dict is not None:
+        # the extracted triples are STAGED to parquet once and both the
+        # edge derivation and the final rewrite read the staged table —
+        # the lazy triple frame would otherwise re-run the whole
+        # page-extraction pass for the CC edge derivation AND again for
+        # the materialize (measured 2 full passes at 6.4M pages). One
+        # compressed-parquet write is far cheaper than a second
+        # extraction pass at any scale where the html/text payload
+        # dominates; the staging dir lives beside the snapshot and is
+        # removed after the commit.
         t = _time.time()
-        if stage_before_link:
-            import os as _os
-            import shutil as _shutil
-
-            staging_dir = _os.path.join(out_path, f"_staging_{run_id}")
-            triples.write.mode("overwrite").parquet(staging_dir)
-            triples = spark.read.parquet(staging_dir)
-            metrics["stage_triples_sec"] = round(_time.time() - t, 3)
-            t = _time.time()
+        staging_dir = os.path.join(out_path, f"_staging_{run_id}")
+        triples.write.mode("overwrite").parquet(staging_dir)
+        triples = spark.read.parquet(staging_dir)
+        metrics["stage_triples_sec"] = round(_time.time() - t, 3)
+        t = _time.time()
         edges = alias_edges_from_triples(triples, alias_dict)
         triples = canonicalize_triples(triples, edges)
         metrics["link_canonicalize_sec"] = round(_time.time() - t, 3)
@@ -139,7 +133,7 @@ def run_pipeline(
     # write_triple_table stamps materialize_sec itself so the persisted
     # summary.json and this return value agree (ADVICE r5)
     if staging_dir is not None:
-        _shutil.rmtree(staging_dir, ignore_errors=True)
+        shutil.rmtree(staging_dir, ignore_errors=True)
     summary["skipped"] = False
     return summary
 

@@ -292,7 +292,7 @@ def _parse_logical_source(g: Graph, node: Term, bindings: dict[str, str]) -> Log
         # leaves these sources undeclared and delegates the whole
         # mapping to its Java jar (/root/reference/src/rml/rml.ts:136-147);
         # here they compile to a spark.read JDBC scan (sources/registry.py
-        # _jdbc_records_df) with pushdown into the database.
+        # _jdbc_df) with pushdown into the database.
         dsn = g.object(src, voc.D2RQ_JDBC_DSN)
         if dsn is None:
             raise MappingParseError("d2rq:Database without d2rq:jdbcDSN")

@@ -1,11 +1,20 @@
 """Logical source -> records DataFrame.
 
-Source location conventions:
+Each location yields one of two shapes: a relational frame, whose
+referenced columns are selected as strings, or a frame of documents in a
+payload column, which ``doc_derived`` regexes stamp and the iterator then
+explodes into records. Locations, in dispatch order:
 
+* ``memory:<key>``                      — a registered DataFrame of
+  documents (foreachBatch micro-batches, tests).
+* ``kafka://broker/topic`` / rmls: blank nodes — Structured-Streaming
+  Kafka scan; message values iterate like any document source (B5).
+* a d2rq:Database (``jdbc.url``)        — relational JDBC scan.
 * ``table:<parquet path or dir#name>``  — relational table (kind 'table');
   references are column names. The scale path: at 100 TB this is an
   Iceberg scan; here ``spark.read.parquet``. Column pruning is automatic
-  because we select only referenced columns.
+  because we select only referenced columns. ``rml:query`` with an
+  XPath/JSONPath formulation yields documents instead.
 * ``pages:<parquet path>``              — page table per BASELINE
   input_hint ``(url, warc_ts, html, text, lang)``; the iterator runs over
   the payload column of every page and url/warc_ts pass through for
@@ -16,13 +25,9 @@ Source location conventions:
   snapshot-temp-file model (``/root/reference/src/rml/rml.ts:300``).
 * ``http(s)://...`` or a WoT source description (td:hasForm/
   hctl:hasTarget) — driver-side fetch, one snapshot per run (B5).
-* ``kafka://broker/topic`` / rmls: blank nodes — Structured-Streaming
-  Kafka scan; message values iterate like any document source (B5).
 * ``inline:<payload>``                  — document provided inline
   (tests / snapshot pushes); it enters Spark as one-partition Arrow
   local data (``ioutil.local_frame``), so no Python worker scans it.
-* ``memory:<key>``                      — a registered DataFrame of
-  documents (foreachBatch micro-batches, tests).
 
 Iteration strategy: common shapes run JVM-side with whole-stage codegen
 (XML ``//tag`` iterators via regex fragments + ``from_xml`` with
@@ -37,8 +42,11 @@ shape, the references and (for XML) each document's nesting and
 from __future__ import annotations
 
 import hashlib
+import io
 import json
 import os
+import re
+from dataclasses import replace
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -120,8 +128,6 @@ def _xml_findall(root, path: str) -> list:
             return []
 
 
-
-
 def _xml_iter_records(
     doc: str, iterator: str, refs: list[str], namespaces: dict[str, str] | None = None
 ) -> list[dict]:
@@ -179,7 +185,12 @@ def _strip_xml_namespaces(root) -> None:
             }
 
 
-_XML_ATTR_STEP_RE = None
+# a final attribute step: anything, then '/@name' — the greedy prefix
+# keeps '/@' inside predicates ([a/@b='x']) out of the attr group because
+# the ref must END in a bare attribute name. The name may be Clark-form
+# ('{uri}local') when expand_prefixes rewrote a declared prefix
+# (a:child/@a:id -> {uri}child/@{uri}id)
+_XML_ATTR_STEP_RE = re.compile(r"^(.*)/@((?:\{[^}]*\})?[A-Za-z_][\w.-]*)$")
 
 
 def _xml_eval_ref(el, ref: str):
@@ -187,16 +198,6 @@ def _xml_eval_ref(el, ref: str):
     # text (empty-element references produce empty literals, matching
     # the from_xml fast path — the two paths mix per row, so they must
     # render identically); only a MISSING node yields null/no-triple.
-    import re
-
-    global _XML_ATTR_STEP_RE
-    if _XML_ATTR_STEP_RE is None:
-        # a final attribute step: anything, then '/@name' — the greedy
-        # prefix keeps '/@' inside predicates ([a/@b='x']) out of the
-        # attr group because the ref must END in a bare attribute name.
-        # The name may be Clark-form ('{uri}local') when expand_prefixes
-        # rewrote a declared prefix (a:child/@a:id -> {uri}child/@{uri}id)
-        _XML_ATTR_STEP_RE = re.compile(r"^(.*)/@((?:\{[^}]*\})?[A-Za-z_][\w.-]*)$")
     if ref.startswith("@"):
         return el.get(ref[1:])
     if ref in (".", "text()", "./text()"):
@@ -331,9 +332,6 @@ def _json_eval_ref(el, ref: str):
     return None
 
 
-_FAST_ITER_RE = None  # set lazily below
-
-
 def _xml_fast_path_plan(iterator: str | None, refs: list[str]):
     """If the iterator/refs fit the XML shape the reference fixtures use
     (iterator ``//tag``; refs ``@attr``, ``child``, ``child/@attr``),
@@ -349,8 +347,6 @@ def _xml_fast_path_plan(iterator: str | None, refs: list[str]):
     fragment containing a second ``<tag`` opener swallowed a nested one)
     and routes only those documents through the Python tree-walking
     path."""
-    import re
-
     if not iterator:
         return None
     m = re.fullmatch(r"//([A-Za-z_][\w.-]*)", iterator)
@@ -381,15 +377,6 @@ def _xml_fast_path_plan(iterator: str | None, refs: list[str]):
     return tag, rec_struct, extract
 
 
-def _xml_fast_records_from_frags(frags: DataFrame, rec_struct, extract, passthrough: list[str]) -> DataFrame:
-    """Exploded fragment rows (__frag) -> record rows via builtin from_xml."""
-    parsed = frags.withColumn(
-        "__rec", F.from_xml(F.col("__frag"), rec_struct, {"attributePrefix": "_"})
-    ).filter(F.col("__rec").isNotNull())
-    cols = [F.col(f"__rec.{path}").alias(ref_column_name(ref)) for ref, path in extract]
-    return parsed.select(*passthrough, *cols)
-
-
 def _json_fast_path_plan(iterator: str | None, refs: list[str]):
     """JVM-native JSON iteration for the dominant corpus shape: iterator
     ``$.[*]``/``$[*]`` over an array of objects with top-level-key
@@ -404,8 +391,6 @@ def _json_fast_path_plan(iterator: str | None, refs: list[str]):
     within one query because the path choice is per-PLAN, never mixed
     per row (unlike XML, where nested docs route per row and the two
     paths are kept byte-identical)."""
-    import re
-
     it = (iterator or "").strip()
     if it not in ("$.[*]", "$[*]"):
         return None
@@ -416,12 +401,6 @@ def _json_fast_path_plan(iterator: str | None, refs: list[str]):
             return None
     return T.ArrayType(
         T.StructType([T.StructField(r, T.StringType(), True) for r in refs])
-    )
-
-
-def _records_schema(refs: list[str]) -> T.ArrayType:
-    return T.ArrayType(
-        T.StructType([T.StructField(ref_column_name(r), T.StringType(), True) for r in refs])
     )
 
 
@@ -436,7 +415,9 @@ def _python_iterate_records(
 ) -> DataFrame:
     """Arrow-batched pandas UDF iterate (array<struct> out) + built-in
     explode — the general-shape path for XML/JSON iterators."""
-    schema = _records_schema(refs)
+    schema = T.ArrayType(
+        T.StructType([T.StructField(ref_column_name(r), T.StringType(), True) for r in refs])
+    )
     ref_list = list(refs)
 
     @F.pandas_udf(schema)
@@ -492,10 +473,8 @@ def _iterate_docs_df(df: DataFrame, payload_col: str, ls: LogicalSource, refs: l
         # declared prefix map: Clark-name matching only exists on the
         # walker path (the fragment-regex fast path matches literal tag
         # text and cannot honor prefix bindings)
-        import json as _json
-
         return _python_iterate_records(
-            df, payload_col, ls.kind, ls.iterator, refs, passthrough, _json.loads(ns_json)
+            df, payload_col, ls.kind, ls.iterator, refs, passthrough, json.loads(ns_json)
         )
     if ls.kind == "xpath":
         plan = _xml_fast_path_plan(ls.iterator or "", refs)
@@ -517,11 +496,11 @@ def _iterate_docs_df(df: DataFrame, payload_col: str, ls: LogicalSource, refs: l
             nested = nested | F.coalesce(
                 F.contains(F.col(payload_col), F.lit("xmlns")), F.lit(False)
             )
-            fast = _xml_fast_records_from_frags(
-                with_frags.filter(~nested).select(*passthrough, F.explode("__frags").alias("__frag")),
-                rec_struct,
-                extract,
-                passthrough,
+            frags = with_frags.filter(~nested).select(*passthrough, F.explode("__frags").alias("__frag"))
+            fast = frags.withColumn(
+                "__rec", F.from_xml(F.col("__frag"), rec_struct, {"attributePrefix": "_"})
+            ).filter(F.col("__rec").isNotNull()).select(
+                *passthrough, *[F.col(f"__rec.{path}").alias(ref_column_name(ref)) for ref, path in extract]
             )
             slow = _python_iterate_records(
                 with_frags.filter(nested).drop("__frags"), payload_col, "xpath", ls.iterator, refs, passthrough
@@ -554,12 +533,39 @@ def _apply_doc_derived(
     return df, passthrough + [n for n in doc_derived if n not in passthrough]
 
 
-def _jdbc_records_df(
-    spark: SparkSession,
+def _document_kind(ls: LogicalSource) -> str:
+    """A declared XPath/JSONPath formulation wins; otherwise (pages, Kafka,
+    memory) the iterator decides: ``$`` is JSONPath, anything else XPath."""
+    if ls.kind in ("xpath", "jsonpath"):
+        return ls.kind
+    return "jsonpath" if (ls.iterator or "").startswith("$") else "xpath"
+
+
+def _document_records(
+    docs: DataFrame,
+    payload_col: str,
     ls: LogicalSource,
     refs: list[str],
     passthrough: list[str],
+    doc_derived: dict[str, tuple[str, int]] | None,
 ) -> DataFrame:
+    """The tail of every document source. ``replace`` keeps ``ls.options``,
+    declared XPath namespaces among them."""
+    keep = [c for c in passthrough if c in docs.columns]
+    docs, keep = _apply_doc_derived(docs.select(*keep, payload_col), payload_col, doc_derived, keep)
+    return _iterate_docs_df(docs, payload_col, replace(ls, kind=_document_kind(ls)), refs, keep)
+
+
+def _select_refs(df: DataFrame, keep: list[str], refs: list[str], source: str) -> DataFrame:
+    """A relational frame's records: the ``keep`` columns plus one string
+    column per reference; a reference naming no column raises."""
+    for ref in refs:
+        if ref not in df.columns:
+            raise ValueError(f"source {source!r}: no column {ref!r}")
+    return df.select(*keep, *[F.col(r).cast("string").alias(ref_column_name(r)) for r in refs])
+
+
+def _jdbc_df(spark: SparkSession, ls: LogicalSource) -> DataFrame:
     """Remote relational database scan (d2rq:Database sources): a
     spark.read JDBC plan over ``rr:tableName`` or ``rml:query``.
 
@@ -579,7 +585,7 @@ def _jdbc_records_df(
     with Spark (tests/test_sources.py::test_jdbc_*)."""
     reader = spark.read.format("jdbc")
     for k, v in ls.options.items():
-        if k.startswith("jdbc.") :
+        if k.startswith("jdbc."):
             reader = reader.option(k[len("jdbc."):], v)
     if ls.query:
         reader = reader.option("dbtable", f"({ls.query}) AS rml_spark_q")
@@ -589,16 +595,12 @@ def _jdbc_records_df(
         raise ValueError(
             f"JDBC source {ls.options['jdbc.url']!r} needs rr:tableName or rml:query"
         )
-    df = reader.load()
-    cols = []
-    for ref in refs:
-        if ref not in df.columns:
-            raise ValueError(
-                f"jdbc source {ls.options['jdbc.url']}: no column {ref!r}"
-            )
-        cols.append(F.col(ref).cast("string").alias(ref_column_name(ref)))
-    keep = [c for c in passthrough if c in df.columns]
-    return df.select(*keep, *cols)
+    return reader.load()
+
+
+def _kafka_docs(kafka_df: DataFrame) -> DataFrame:
+    """A Kafka-shaped frame's message values as ``doc`` strings."""
+    return kafka_df.withColumn("doc", F.col("value").cast("string"))
 
 
 def records_df(
@@ -610,44 +612,26 @@ def records_df(
     table_views: dict[str, str] | None = None,
 ) -> DataFrame:
     """Load a logical source and produce its record DataFrame with one
-    string column per reference (named ``ref_<md5>``), plus passthrough
-    metadata columns when the source is a page table. ``doc_derived``
-    maps extra column names to ``(regex, group)`` extracted from the raw
-    document payload before iteration (document-shaped sources only)."""
+    string column per reference (named ``ref_<md5>``), plus the
+    passthrough metadata columns the source has. ``doc_derived`` maps
+    extra column names to ``(regex, group)`` extracted from the raw
+    document payload before iteration (document-shaped sources only).
+    Each location branch yields a frame plus its payload column (None:
+    relational); one tail per shape follows."""
     passthrough = passthrough or []
     src = ls.source
+    payload = None
     if src.startswith("memory:"):
         # pre-built document frame (micro-batch execution, tests): the
         # registered DataFrame's ``doc`` column iterates exactly like a
         # file-backed document source
-        df = get_memory_source(src[len("memory:"):])
-        keep = [c for c in passthrough if c in df.columns]
-        df, keep = _apply_doc_derived(df, "doc", doc_derived, keep)
-        return _iterate_docs_df(df, "doc", ls, refs, keep)
-    if src.startswith("kafka://") or ls.kind == "kafka":
-        stream = kafka_stream_df(spark, ls)
-        return kafka_records_df(stream, ls, refs, passthrough, doc_derived)
-    if ls.options.get("jdbc.url"):
-        if doc_derived:
-            raise ValueError(
-                "doc_derived (publisher regex) needs a raw document payload; "
-                "a JDBC relational source has none — use publisher_ref"
-            )
-        return _jdbc_records_df(spark, ls, refs, passthrough)
-    if (
-        doc_derived
-        and (src.startswith("table:") or ls.kind in ("table", "csv"))
-        # exception: rml:query + document formulation yields a real
-        # per-row payload the publisher regex can run over
-        and not (ls.query and ls.kind in ("xpath", "jsonpath"))
-    ):
-        raise ValueError(
-            f"doc_derived (publisher regex) needs a raw document payload; "
-            f"source {src!r} of kind {ls.kind!r} has none — use a record "
-            "reference (publisher_ref) for relational/CSV sources"
-        )
-    if src.startswith("table:") or ls.kind == "table":
-        path = src[len("table:"):] if src.startswith("table:") else src
+        df, payload = get_memory_source(src[len("memory:"):]), "doc"
+    elif src.startswith("kafka://") or ls.kind == "kafka":
+        df, payload = _kafka_docs(kafka_stream_df(spark, ls)), "doc"
+    elif ls.options.get("jdbc.url"):
+        df = _jdbc_df(spark, ls)
+    elif src.startswith("table:") or ls.kind == "table":
+        path = src.removeprefix("table:")
         df = read_parquet_spread(spark, path)
         if ls.query:
             df = _run_source_query(spark, df, ls, path, table_views)
@@ -656,37 +640,12 @@ def records_df(
                 # SELECTs a payload column (ls.payload_column, or the
                 # single/first output column) whose per-row documents
                 # then iterate like any document source
-                payload = (
-                    ls.payload_column if ls.payload_column in df.columns else df.columns[0]
-                )
-                docs = df.withColumn("doc", F.col(payload).cast("string"))
-                keep = [c for c in passthrough if c in docs.columns]
-                docs, keep = _apply_doc_derived(docs, "doc", doc_derived, keep)
-                return _iterate_docs_df(docs, "doc", ls, refs, keep)
-        cols = []
-        for ref in refs:
-            if ref not in df.columns:
-                raise ValueError(f"table source {path}: no column {ref!r}")
-            cols.append(F.col(ref).cast("string").alias(ref_column_name(ref)))
-        keep = [c for c in passthrough if c in df.columns]
-        return df.select(*keep, *cols)
-    if src.startswith("pages:") or ls.kind == "pages":
-        path = src[len("pages:"):] if src.startswith("pages:") else src
-        pages = read_parquet_spread(spark, path)
-        keep = [c for c in passthrough if c in pages.columns]
-        inner = LogicalSource(source=src, kind="xpath" if ls.iterator and ls.iterator.startswith("/") else ls.kind, iterator=ls.iterator, payload_column=ls.payload_column)
-        # default: XML payloads unless iterator looks like JSONPath
-        if ls.iterator and ls.iterator.startswith("$"):
-            inner.kind = "jsonpath"
-        elif inner.kind == "pages":
-            inner.kind = "xpath"
-        docs = pages.select(*keep, ls.payload_column)
-        docs, keep = _apply_doc_derived(docs, ls.payload_column, doc_derived, keep)
-        return _iterate_docs_df(docs, ls.payload_column, inner, refs, keep)
-    if ls.kind == "csv":
+                col = ls.payload_column if ls.payload_column in df.columns else df.columns[0]
+                df, payload = df.withColumn("doc", F.col(col).cast("string")), "doc"
+    elif src.startswith("pages:") or ls.kind == "pages":
+        df, payload = read_parquet_spread(spark, src.removeprefix("pages:")), ls.payload_column
+    elif ls.kind == "csv":
         if src.startswith("inline:"):
-            import io
-
             pdf = pd.read_csv(io.StringIO(src[len("inline:"):]), sep=ls.delimiter, dtype=str)
             df = local_frame(
                 spark,
@@ -695,26 +654,33 @@ def records_df(
             )
         else:
             df = spark.read.option("header", "true").option("delimiter", ls.delimiter).csv(src)
-        cols = []
-        for ref in refs:
-            if ref not in df.columns:
-                raise ValueError(f"csv source {src}: no column {ref!r}")
-            cols.append(F.col(ref).cast("string").alias(ref_column_name(ref)))
-        return df.select(*cols)
-    if ls.kind in ("xpath", "jsonpath"):
+        # CSV records carry no passthrough columns: a CSV column that
+        # happens to be named warc_ts would otherwise become the records'
+        # LDES timestamp
+        passthrough = []
+    elif ls.kind in ("xpath", "jsonpath"):
         if src.startswith("inline:"):
-            docs = local_frame(spark, [(src[len("inline:"):],)], "doc string")
+            df = local_frame(spark, [(src[len("inline:"):],)], "doc string")
         elif src.startswith(("http://", "https://")):
             # WoT/HTTP API logical source (td:Form/hctl:hasTarget,
             # /root/reference/test/rml.test.ts:299-320): the document is a
             # driver-side fetch — one snapshot per run, exactly the
             # reference's whole-document model.
-            docs = local_frame(spark, [(fetch_http_source(src),)], "doc string")
+            df = local_frame(spark, [(fetch_http_source(src),)], "doc string")
         else:
-            docs = spark.read.text(src, wholetext=True).withColumnRenamed("value", "doc")
-        docs, derived = _apply_doc_derived(docs, "doc", doc_derived, [])
-        return _iterate_docs_df(docs, "doc", ls, refs, derived)
-    raise ValueError(f"unsupported logical source kind {ls.kind!r} for {src!r}")
+            df = spark.read.text(src, wholetext=True).withColumnRenamed("value", "doc")
+        payload = "doc"
+    else:
+        raise ValueError(f"unsupported logical source kind {ls.kind!r} for {src!r}")
+    if payload is not None:
+        return _document_records(df, payload, ls, refs, passthrough, doc_derived)
+    if doc_derived:
+        raise ValueError(
+            f"doc_derived (publisher regex) needs a raw document payload; "
+            f"source {src!r} of kind {ls.kind!r} is relational — use a record "
+            "reference (publisher_ref)"
+        )
+    return _select_refs(df, [c for c in passthrough if c in df.columns], refs, src)
 
 
 def _source_view_name(ls: LogicalSource, path: str) -> str:
@@ -748,14 +714,12 @@ def _run_source_query(
     AND appears as a word in the query text registers as a view too —
     the RDB parity a single-table view can't give. The primary table's
     view registers LAST, so a colliding binding never shadows it."""
-    import re as _re
-
     for name, loc in sorted((table_views or {}).items()):
-        if not _re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
+        if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
             continue
         if not (loc.startswith("table:") or loc.endswith(".parquet")):
             continue
-        if not _re.search(rf"\b{name}\b", ls.query):
+        if not re.search(rf"\b{name}\b", ls.query):
             continue  # don't pay a file listing for unreferenced tables
         spark.read.parquet(loc[len("table:"):] if loc.startswith("table:") else loc).createOrReplaceTempView(name)
     view = _source_view_name(ls, path)
@@ -825,14 +789,7 @@ def kafka_records_df(
     through the same iterator-explode stage as any other source. Works
     identically on the streaming scan and on a static Kafka-shaped frame
     (how tests exercise the transformation without a broker)."""
-    keep = [c for c in (passthrough or []) if c in kafka_df.columns]
-    docs = kafka_df.select(*keep, F.col("value").cast("string").alias("doc"))
-    docs, keep = _apply_doc_derived(docs, "doc", doc_derived, keep)
-    payload_kind = ls.kind
-    if payload_kind in ("kafka", "pages"):
-        payload_kind = "jsonpath" if (ls.iterator or "$").startswith("$") else "xpath"
-    inner = LogicalSource(source=ls.source, kind=payload_kind, iterator=ls.iterator)
-    return _iterate_docs_df(docs, "doc", inner, refs, keep)
+    return _document_records(_kafka_docs(kafka_df), "doc", ls, refs, passthrough or [], doc_derived)
 
 
 def fetch_http_source(url: str, timeout: float = 15.0) -> str:

@@ -1,12 +1,11 @@
 """Regression tests for the round-2 self-review findings: YARRRML
 language tags + multi-target subjects, repeated-param ordering past 10,
-scan-cache keys with delimiter, embedding-dim probing, LDES metadata
-graphs, micro-batch replay idempotence, memory-source lifecycle."""
+embedding-dim probing, LDES metadata graphs, micro-batch replay
+idempotence, memory-source lifecycle."""
 
 from pyspark.sql import functions as F
 
 from rml_utils_processor_ts_spark.operators.executor import PlanExecutor, execute_mapping
-from rml_utils_processor_ts_spark.plans.rml_parser import parse_mapping
 from rml_utils_processor_ts_spark.plans.yarrrml import yarrrml_to_plan
 
 
@@ -75,36 +74,6 @@ def test_repeated_params_order_past_ten(spark):
     col = compile_function(fn, lambda tm, pos: F.lit(tm.constant))
     got = spark.range(1).select(col.alias("x")).first()["x"]
     assert got == "&".join(f"v{i}" for i in range(12))
-
-
-def test_same_file_different_delimiters_not_cache_collided(spark, tmp_path):
-    """Two csvw sources over the SAME file with different delimiters are
-    different scans (the scan-cache key includes the dialect)."""
-    p = tmp_path / "multi.csv"
-    p.write_text("a;b,c\nx;y,z\n")  # header 'a;b' + 'c' under ','; 'a' + 'b,c' under ';'
-    mapping = f"""
-ex:m_comma a rr:TriplesMap ;
-    rml:logicalSource [ a rml:LogicalSource ;
-        rml:source [ a csvw:Table ; csvw:url "{p}" ] ;
-        rml:referenceFormulation ql:CSV ] ;
-    rr:subjectMap [ rr:template "http://x/comma/{{c}}" ] ;
-    rr:predicateObjectMap [ rr:predicateMap [ rr:constant <http://x/p> ] ;
-        rr:objectMap [ rml:reference "a;b" ] ] .
-
-ex:m_semi a rr:TriplesMap ;
-    rml:logicalSource [ a rml:LogicalSource ;
-        rml:source [ a csvw:Table ; csvw:url "{p}" ;
-            csvw:dialect [ csvw:delimiter ";" ] ] ;
-        rml:referenceFormulation ql:CSV ] ;
-    rr:subjectMap [ rr:template "http://x/semi/{{a}}" ] ;
-    rr:predicateObjectMap [ rr:predicateMap [ rr:constant <http://x/p> ] ;
-        rr:objectMap [ rml:reference "b,c" ] ] .
-"""
-    plan = parse_mapping(mapping)
-    keys = {tm.logical_source.key() for tm in plan.triples_maps}
-    assert len(keys) == 2
-    got = {(r["s"], r["o"]) for r in execute_mapping(spark, mapping).triples.collect()}
-    assert got == {("http://x/comma/z", "x;y"), ("http://x/semi/x", "y,z")}
 
 
 def test_embedding_lsh_probes_dim(spark):
@@ -217,35 +186,6 @@ def test_lsh_index_external_query_vectors(spark, tmp_path):
 
     with pytest.raises(ValueError, match="not present"):
         lsh_index_topk(spark, path, [0, 99999999], k=5)
-
-
-def test_xml_fast_and_slow_paths_render_identically(spark):
-    """The XML fast path and the tree walker mix PER ROW (nested docs
-    route to the walker), so they must render values identically —
-    including empty child elements (XPath string() of an existing empty
-    element is '', not null) and whitespace-padded text."""
-    from rml_utils_processor_ts_spark.plans.model import LogicalSource
-    from rml_utils_processor_ts_spark.sources.registry import records_df, ref_column_name
-
-    flat = '<root><data id="1"><label>  padded  </label><empty></empty></data></root>'
-    nested = (
-        '<root><data id="1"><label>  padded  </label><empty></empty>'
-        '<data id="inner"><label>x</label></data></data></root>'
-    )
-    refs = ["@id", "label", "empty", "missing"]
-
-    def rows(doc):
-        ls = LogicalSource(source="inline:" + doc, kind="xpath", iterator="//data")
-        return {
-            tuple(r[ref_column_name(x)] for x in refs)
-            for r in records_df(spark, ls, refs).collect()
-        }
-
-    fast_rows = rows(flat)
-    slow_rows = rows(nested)
-    assert ("1", "padded", "", None) in fast_rows
-    assert ("1", "padded", "", None) in slow_rows, "empty element must be '' on both paths"
-    assert ("inner", "x", None, None) in slow_rows
 
 
 def test_ldes_metadata_inherits_constant_graph(spark):
